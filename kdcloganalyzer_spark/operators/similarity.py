@@ -313,9 +313,19 @@ def topk_cosine_lsh(
     n_planes: int = 8,
     n_tables: int = 4,
     dim: int = 64,
+    multiprobe: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates from n_tables signed-projection bucket
-    joins, exact cosine re-rank on candidates."""
+    joins, exact cosine re-rank on candidates.
+
+    ``multiprobe=True`` is MULTI-PROBE LSH (Lv et al., VLDB 2007): each
+    query also probes the buckets one bit-flip away from its own
+    (n_planes + 1 probes per table), so fewer tables (a smaller
+    corpus-side index) reach the same recall while the cheap,
+    query-side probe count grows. The expansion happens only on the
+    |Q|-sized query side before the broadcast, so the bucket equi-join
+    shape is unchanged. Deterministic either way: seeded literal planes,
+    order-identical float folds."""
     tables = [
         _hyperplanes(dim, n_planes, seed=100 + t) for t in range(n_tables)
     ]
@@ -341,11 +351,18 @@ def topk_cosine_lsh(
             )
         ).alias("tb"),
     ).select("vec_id", "unit", "tb.table", "tb.bucket")
+    bucket = F.col("bucket")
+    if multiprobe:
+        # Query-side probe expansion: own bucket + every single-bit flip.
+        flips = [
+            F.expr(f"bucket ^ {1 << j}").cast("long") for j in range(n_planes)
+        ]
+        bucket = F.explode(F.array(bucket, *flips)).alias("bucket")
     q = bucketed.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"),
         F.col("unit").alias("q_unit"),
         "table",
-        "bucket",
+        bucket,
     )
     cand = (
         bucketed.join(F.broadcast(q), ["table", "bucket"])
@@ -908,90 +925,6 @@ def range_cosine_exact(
     )
 
 
-def topk_cosine_lsh_multiprobe(
-    emb: DataFrame,
-    n_queries: int = 5,
-    k: int = 10,
-    n_planes: int = 8,
-    n_tables: int = 2,
-    dim: int = 64,
-) -> DataFrame:
-    """MULTI-PROBE LSH (Lv et al., VLDB 2007): instead of more hash
-    tables, each query ALSO probes the buckets one bit-flip away from
-    its own (n_planes + 1 probes per table) — the memory/recall trade
-    that makes LSH deployable: HALF the tables of topk_cosine_lsh
-    (2 vs 4) with the recall recovered from probing, i.e. index size
-    shrinks 2× while the probe count (cheap, query-side) grows.
-    Candidates re-rank exactly, same as the single-probe form.
-
-    Scale: the corpus-side index is n_tables bucket entries per vector
-    (the expensive, stored half — now halved); probe expansion happens
-    only on the |Q|-sized query side before the broadcast, so the
-    bucket equi-join shape is unchanged. Deterministic for the same
-    reason as topk_cosine_lsh: seeded literal planes, order-identical
-    float folds."""
-    tables = [
-        _hyperplanes(dim, n_planes, seed=100 + t) for t in range(n_tables)
-    ]
-    all_planes = [row for t in tables for row in t]
-    unit = with_unit_vector(
-        spread(emb).select("vec_id", "embedding"), "embedding"
-    )
-    with_bits = unit.select(
-        "vec_id",
-        "unit",
-        _sign_bits_expr(F.col("unit"), all_planes).alias("bits"),
-    )
-    bucketed = with_bits.select(
-        "vec_id",
-        "unit",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table"),
-                        _pack_bucket(
-                            F.col("bits"), t * n_planes, n_planes
-                        ).alias("bucket"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("vec_id", "unit", "tb.table", "tb.bucket")
-    # Query-side probe expansion: own bucket + every single-bit flip.
-    probes = F.array(
-        F.col("bucket"),
-        *[
-            F.expr(f"bucket ^ {1 << j}").cast("long")
-            for j in range(n_planes)
-        ],
-    )
-    q = (
-        bucketed.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("unit").alias("q_unit"),
-            "table",
-            F.explode(probes).alias("bucket"),
-        )
-    )
-    cand = (
-        bucketed.join(F.broadcast(q), ["table", "bucket"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "q_unit", "vec_id", "unit")
-        .dropDuplicates(["q_id", "vec_id"])
-    )
-    cos = F.round(_dot(F.col("q_unit"), F.col("unit")), 6)
-    scored = cand.select("q_id", "vec_id", cos.alias("cos"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
-
-
 def lsh_multiprobe_oracle_sql(
     n_queries: int = 5,
     k: int = 10,
@@ -999,7 +932,7 @@ def lsh_multiprobe_oracle_sql(
     n_tables: int = 2,
     dim: int = 64,
 ) -> str:
-    """DuckDB twin of topk_cosine_lsh_multiprobe — the lsh_oracle_sql
+    """DuckDB twin of multi-probe ``topk_cosine_lsh`` — the lsh_oracle_sql
     construction with the query buckets expanded by single-bit XOR
     probes (generate_series over plane indexes)."""
     tables = [

@@ -171,39 +171,96 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     every join after the first has a small broadcastable right side; the
     events scan is reused across stages by Catalyst (same source, three
     type filters — each scan prunes with a pushed event_type filter)."""
-    ev = load_table(spark, sf_dir, "events")
+    return _funnel(spark, sf_dir, window_h=None)
 
-    v = (
+
+@query(
+    "events_funnel_windowed",
+    oracle="""
+    WITH v AS (
+      SELECT user_id, min(ts) AS t1 FROM events
+      WHERE event_type = 'view' GROUP BY user_id
+    ), c AS (
+      SELECT e.user_id, min(e.ts) AS t2
+      FROM events e JOIN v ON e.user_id = v.user_id
+      WHERE e.event_type = 'click' AND e.ts > v.t1
+        AND e.ts <= v.t1 + INTERVAL 24 HOUR
+      GROUP BY e.user_id
+    ), p AS (
+      SELECT e.user_id, min(e.ts) AS t3
+      FROM events e JOIN c ON e.user_id = c.user_id
+      WHERE e.event_type = 'purchase' AND e.ts > c.t2
+        AND e.ts <= c.t2 + INTERVAL 24 HOUR
+      GROUP BY e.user_id
+    )
+    SELECT * FROM (
+      SELECT 1 AS stage, 'view' AS event_type,
+             (SELECT count(*) FROM v) AS n_users
+      UNION ALL
+      SELECT 2, 'click_24h', (SELECT count(*) FROM c)
+      UNION ALL
+      SELECT 3, 'purchase_24h', (SELECT count(*) FROM p)
+    )
+    """,
+)
+def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TIME-BOUNDED FUNNEL — view → click → purchase where each step
+    must land within 24 HOURS of the previous step's completion (the
+    attribution-window semantics real conversion funnels use; the
+    unbounded events_funnel counts a purchase a month later, this one
+    does not). Same min-timestamp chaining as the unbounded form with
+    an upper bound per hop — the earliest-qualifying-event convention
+    makes the count deterministic.
+
+    Scale: per-stage min() collapses per user before each hop's join,
+    so every join is entity-sized and co-partitioned on user_id.
+    Windowing changes no plan shape — only the residual predicate —
+    which is exactly why funnels generalize to K stages × arbitrary
+    windows at 100 TB."""
+    return _funnel(spark, sf_dir, window_h=24)
+
+
+def _funnel(spark: SparkSession, sf_dir: str, window_h: int | None) -> DataFrame:
+    """view → click → purchase stage counts. Unbounded
+    (``window_h=None``): each step only has to come after the previous
+    one, and every stage's user set is broadcast into the next join.
+    Windowed: each step must also land within ``window_h`` hours of the
+    previous one (stage names gain an ``_<window_h>h`` suffix), and the
+    planner picks the join strategy."""
+    ev = load_table(spark, sf_dir, "events")
+    prev = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
     )
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .join(F.broadcast(v), "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(F.broadcast(c), "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-
-    def stage(n: int, name: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.lit(n).alias("stage"),
-            F.lit(name).alias("event_type"),
-            F.count("*").alias("n_users"),
+    out = _funnel_stage(1, "view", prev)
+    for n, event_type in ((2, "click"), (3, "purchase")):
+        t_prev = F.col(f"t{n - 1}")
+        after = F.col("ts") > t_prev
+        if window_h is None:
+            right, name = F.broadcast(prev), event_type
+        else:
+            window_us = F.lit(window_h * 3600 * 1000000)
+            after = after & (
+                F.unix_micros("ts") <= F.unix_micros(t_prev) + window_us
+            )
+            right, name = prev, f"{event_type}_{window_h}h"
+        prev = (
+            ev.filter(F.col("event_type") == event_type)
+            .join(right, "user_id")
+            .filter(after)
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(f"t{n}"))
         )
+        out = out.unionByName(_funnel_stage(n, name, prev))
+    return out
 
-    return (
-        stage(1, "view", v)
-        .unionByName(stage(2, "click", c))
-        .unionByName(stage(3, "purchase", p))
+
+def _funnel_stage(n: int, name: str, users: DataFrame) -> DataFrame:
+    return users.agg(
+        F.lit(n).alias("stage"),
+        F.lit(name).alias("event_type"),
+        F.count("*").alias("n_users"),
     )
 
 
@@ -290,8 +347,6 @@ def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_type", "approx_users", "n_days")
     )
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -839,7 +894,7 @@ def events_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Triangle counting over the part co-order graph
 # ---------------------------------------------------------------------------
 #: Shared by graph_triangle_count and its shuffle-regime twin
-#: (plans/round13_ops.py) — identical triangle set by construction.
+#: (graph_triangle_count_shuffle) — identical triangle set by construction.
 TRIANGLE_ORACLE = """
     WITH e AS (
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -878,11 +933,35 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     list is cached per (session, sf) like the PageRank graph and the
     ANN quantizers — the wedge+closing pipeline (the per-run cost) is
     exchange-free until its final tiny aggregate."""
+    return _triangle_top20(spark, sf_dir)
+
+
+@query("graph_triangle_count_shuffle", oracle=TRIANGLE_ORACLE)
+def graph_triangle_count_shuffle(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """TRIANGLE COUNTS, SHUFFLE REGIME — ``triangle_counts`` with the
+    broadcast gate forced shut, so the plan is the generic
+    last-reducer-safe layout a 100 TB graph actually runs: oriented
+    wedges and the closing edge set exchanged as volume-sized
+    co-partitioned equi-joins (operators/graph.py above-gate path).
+    Same oracle as ``graph_triangle_count`` — the two regimes must
+    produce the identical triangle set, which makes this id the
+    standing hash-verified receipt for the scale path. The edge cache
+    is shared with the broadcast twin, so the bench prices exactly the
+    regime difference."""
+    return _triangle_top20(spark, sf_dir, broadcast_max_edges=0)
+
+
+def _triangle_top20(spark: SparkSession, sf_dir: str, **regime) -> DataFrame:
+    """Top-20 parts by triangle count; ``regime`` passes
+    ``broadcast_max_edges`` through to ``triangle_counts`` (0 forces
+    the shuffle regime; the default lets the edge volume decide)."""
     from kdcloganalyzer_spark.operators.graph import triangle_counts
 
     edges = _copart_edges(spark, sf_dir)
     return (
-        triangle_counts(edges, materialized=True)
+        triangle_counts(edges, materialized=True, **regime)
         .orderBy(F.desc("tri_n"), F.asc("node"))
         .limit(20)
     )
@@ -1130,17 +1209,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort into a broadcast of 3 cut values). The corpus max ts is
     a 1-row aggregate collected driver-side (bounded control data — the
     sanctioned scalar pattern, never a BNLJ 1-row join)."""
-    ev = load_table(spark, sf_dir, "events")
-    mx_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    u = ev.groupBy("user_id").agg(
-        F.expr(f"({mx_us}L - unix_micros(max(ts))) div 86400000000").alias(
-            "r_days"
-        ),
-        F.count("*").alias("freq"),
-        F.sum(F.round(F.col("value") * 100)).cast("bigint").alias(
-            "monetary_cents"
-        ),
-    )
+    u = _rfm_per_user(spark, sf_dir)
     w_r = Window.orderBy("r_days", "user_id")
     w_f = Window.orderBy(F.desc("freq"), "user_id")
     w_m = Window.orderBy(F.desc("monetary_cents"), "user_id")
@@ -1155,9 +1224,23 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# RFM segmentation — approx-cutoff variant (the 100 TB swap, registered)
-# ---------------------------------------------------------------------------
+def _rfm_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, r_days, freq, monetary_cents): integer days from the
+    user's last event to the corpus max ts (collected driver-side as a
+    bounded control scalar), event count, and exact value cents."""
+    ev = load_table(spark, sf_dir, "events")
+    mx_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+    return ev.groupBy("user_id").agg(
+        F.expr(f"({mx_us}L - unix_micros(max(ts))) div 86400000000").alias(
+            "r_days"
+        ),
+        F.count("*").alias("freq"),
+        F.sum(F.round(F.col("value") * 100)).cast("bigint").alias(
+            "monetary_cents"
+        ),
+    )
+
+
 @query(
     "events_rfm_segmentation_approx",
     oracle="""
@@ -1196,9 +1279,8 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_rfm_segmentation_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM SEGMENTATION, APPROX-CUTOFF FORM — the 100 TB swap that
-    ``events_rfm_segmentation``'s docstring names, registered as a
-    runnable, oracle-checked query (VERDICT r6 item 4). The exact twin
+    """RFM SEGMENTATION, APPROX-CUTOFF FORM — the 100 TB form of
+    ``events_rfm_segmentation``, oracle-checked. The exact twin
     ranks every user through three GLOBAL ntile windows (a
     single-partition sort of |users| rows — the honest exact cost);
     this variant computes the 25/50/75 cut values with
@@ -1220,17 +1302,7 @@ def events_rfm_segmentation_approx(spark: SparkSession, sf_dir: str) -> DataFram
     base is localCheckpointed so the cutoff job and the final
     projection share one materialization instead of re-shuffling
     events twice."""
-    ev = load_table(spark, sf_dir, "events")
-    mx_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    u = ev.groupBy("user_id").agg(
-        F.expr(f"({mx_us}L - unix_micros(max(ts))) div 86400000000").alias(
-            "r_days"
-        ),
-        F.count("*").alias("freq"),
-        F.sum(F.round(F.col("value") * 100)).cast("bigint").alias(
-            "monetary_cents"
-        ),
-    ).localCheckpoint(eager=False)
+    u = _rfm_per_user(spark, sf_dir).localCheckpoint(eager=False)
     cuts = u.agg(
         F.expr(
             "approx_percentile(r_days, array(0.25,0.5,0.75), 1000000)"
@@ -1322,11 +1394,9 @@ def audience_overlap_hll_estimates(
     """,
 )
 def events_audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AUDIENCE OVERLAP, HLL-SKETCH FORM — the summary-merge swap that
-    ``events_audience_overlap``'s docstring names, registered as a
-    runnable query (VERDICT r6 "100 TB variants only in docstrings").
-    The exact form needs the distinct (type, user) table AND a
-    user-keyed self-join; when the audience dimension is unbounded
+    """AUDIENCE OVERLAP, HLL-SKETCH FORM — the summary-merge form of
+    ``events_audience_overlap``. The exact form needs the distinct
+    (type, user) table AND a user-keyed self-join; when the audience dimension is unbounded
     (cohorts, campaign segments) or users no longer fit a distinct
     shuffle, the mergeable summary wins: ONE pass builds a Datasketches
     HLL per type (partial-agg'd, no distinct materialization), the
@@ -1340,14 +1410,14 @@ def events_audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     table with itself — sanctioned BNLJ (tiny dimensional cross), the
     same class as sim_search_cosine's query-set cross.
 
-    DRIVER-CHECKABLE ORACLE (r8 — previously rows-only): Datasketches
+    DRIVER-CHECKABLE ORACLE: Datasketches
     estimates themselves have no DuckDB twin (DuckDB's approx_distinct
     is a different sketch), so the registered output reports the EXACT
     per-pair counts (identical to events_audience_overlap's green
     oracle) plus ``hll_in_envelope`` — Spark computes it as "every HLL
     estimate within the lgK=14 envelope of the exact value" (2% of the
-    relevant cardinality, ≥2 absolute — the same bound
-    tests/test_round7_ops.py pins), the oracle asserts the literal
+    relevant cardinality, ≥2 absolute — the same bound the sketch
+    tests pin), the oracle asserts the literal
     TRUE. A sketch regression flips the flag and fails the driver hash.
     The raw estimates stay readable via
     analytics.audience_overlap_hll_estimates (pytest uses it)."""
@@ -1612,9 +1682,99 @@ def sessionize_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: reuses the sessionizer's single user_id shuffle for the
     window + per-session aggregate; the distribution pass then reduces
     |sessions| rows to ONE — exact quantiles hold the session list per
-    group, so at 100 TB the quantile slots swap to the KLL sketch
-    (agg_quantile_sketch) and everything else is a partial-agg'd
+    group, so at 100 TB the quantile slots swap to a mergeable sketch
+    (the ``_sketch`` form) and everything else is a partial-agg'd
     global aggregate."""
+    return _session_rollup(_gap_sessions(spark, sf_dir))
+
+
+def _sess_rollup_sketch_oracle() -> str:
+    return f"""
+    WITH o AS (
+      SELECT user_id, ts,
+             epoch_us(ts) - lag(epoch_us(ts))
+               OVER (PARTITION BY user_id ORDER BY ts) AS gap_us
+      FROM events
+    ), s AS (
+      SELECT user_id, ts,
+             sum(CASE WHEN gap_us IS NULL
+                        OR gap_us > {_GAP_MIN} * 60 * 1000000
+                      THEN 1 ELSE 0 END)
+               OVER (PARTITION BY user_id ORDER BY ts
+                     ROWS UNBOUNDED PRECEDING) AS sess_id
+      FROM o
+    ), sess AS (
+      SELECT user_id, sess_id,
+             epoch_us(max(ts)) - epoch_us(min(ts)) AS dur_us,
+             count(*) AS n_events
+      FROM s GROUP BY user_id, sess_id
+    )
+    SELECT count(*) AS n_sessions,
+           CAST(sum(n_events) AS BIGINT) AS n_events,
+           CAST(round(2 * quantile_cont(dur_us, 0.5)) AS BIGINT)
+             AS med2_dur_us,
+           CAST(round(10 * quantile_cont(dur_us, 0.9)) AS BIGINT)
+             AS p90x10_dur_us,
+           CAST(max(dur_us) AS BIGINT) AS max_dur_us,
+           CAST(round(2 * quantile_cont(n_events, 0.5)) AS BIGINT)
+             AS med2_events,
+           CAST(count(*) FILTER (n_events = 1) AS BIGINT) AS n_bounces,
+           TRUE AS sketch_in_envelope
+    FROM sess
+    """
+
+
+@query("sessionize_stats_rollup_sketch", oracle=_sess_rollup_sketch_oracle())
+def sessionize_stats_rollup_sketch(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """SESSION STATS ROLLUP, SKETCH FORM — exact percentile() holds
+    every session's value per group, so at 100 TB the three quantile
+    slots swap to a mergeable percentile sketch (``percentile_approx``,
+    GK — one partial-agg'd pass, fixed sketch state per partition)
+    while count/sum/max/bounces are already partial-agg'd. The reported
+    columns are the EXACT twin's (hash gate re-verifies the whole
+    rollup); the sketch feeds ``sketch_in_envelope`` — TRUE iff each
+    sketch quantile v_q lands within max(3, 1% of n) session-ranks of
+    its target (count(x <= v_q) >= floor(q*n) - tol AND count(x < v_q)
+    <= ceil(q*n) + tol, for q in {0.5 dur, 0.9 dur, 0.5 events}).
+    Sketch points and rank counts are bounded control scalars (two
+    1-row collects on the checkpointed session summary)."""
+    sess = _gap_sessions(spark, sf_dir).localCheckpoint(eager=False)
+    a = sess.agg(
+        F.percentile_approx("dur_us", [0.5, 0.9], 2000).alias("dq"),
+        F.percentile_approx("n_events", 0.5, 2000).alias("e50"),
+        F.count("*").alias("n"),
+    ).first()
+    d50, d90 = int(a["dq"][0]), int(a["dq"][1])
+    e50, n = int(a["e50"]), int(a["n"])
+    tol = max(3, n // 100)
+    checks = [("d50", "dur_us", d50, n // 2), ("d90", "dur_us", d90, (9 * n) // 10),
+              ("e50", "n_events", e50, n // 2)]
+    r = sess.agg(
+        *[
+            F.sum(
+                F.when(F.col(col) <= F.lit(v), 1).otherwise(0)
+            ).alias(f"le_{tag}")
+            for tag, col, v, _ in checks
+        ],
+        *[
+            F.sum(
+                F.when(F.col(col) < F.lit(v), 1).otherwise(0)
+            ).alias(f"lt_{tag}")
+            for tag, col, v, _ in checks
+        ],
+    ).first()
+    in_env = all(
+        r[f"le_{tag}"] >= target - tol and r[f"lt_{tag}"] <= target + tol
+        for tag, _, _, target in checks
+    )
+    return _session_rollup(sess, F.lit(in_env).alias("sketch_in_envelope"))
+
+
+def _gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, sess_id, dur_us, n_events) per gap session: a new
+    session starts after more than _GAP_MIN minutes of inactivity."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
     gap_us = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
@@ -1628,12 +1788,17 @@ def sessionize_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(w.rowsBetween(Window.unboundedPreceding, 0))
         .alias("sess_id"),
     )
-    sess = s.groupBy("user_id", "sess_id").agg(
+    return s.groupBy("user_id", "sess_id").agg(
         (
             F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))
         ).alias("dur_us"),
         F.count("*").alias("n_events"),
     )
+
+
+def _session_rollup(sess: DataFrame, *extra) -> DataFrame:
+    """One-row session distribution report (exact quantiles, scaled to
+    stay integer), plus any ``extra`` columns."""
     return sess.agg(
         F.count("*").alias("n_sessions"),
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -1650,6 +1815,7 @@ def sessionize_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("n_events") == 1, 1))
         .cast("bigint")
         .alias("n_bounces"),
+        *extra,
     )
 
 
@@ -2063,41 +2229,104 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/MAU STICKINESS — the engagement ratio every consumer product
     tracks: average daily actives over monthly actives, per month. The
     ratio is exact integer micro-units of (Σdau · 1e6) / (days · mau) —
-    both distinct counts are exact, so the metric hash-verifies (an
-    approx_count_distinct swap changes only the two count nodes).
+    both distinct counts are exact, so the metric hash-verifies.
 
-    Scale: two distinct-aggregates over different grains share the one
-    events scan; per-day and per-month distincts are the partial-agg +
-    expand plan Catalyst already uses for multi-distinct. At true 100 TB
-    the per-day exact distinct is the heavy node — the documented swap
-    is HLL sketches per (day) merged upward to (month), which this
-    repo's agg_hll_sketch_merge / users_few_services_approx already
-    exhibit; the report shape here stays identical."""
+    Scale: both distinct grains derive from one (user, day) activity
+    collapse — dau = per-day row count, mau = per-month count over the
+    (user, month) dedupe of the same table — so the corpus is scanned
+    and distinct-expanded ONCE. At true 100 TB the per-day exact
+    distinct is the heavy node — the documented swap is HLL sketches
+    per day merged upward to month (the ``_hll`` form); the report
+    shape stays identical."""
+    return _dau_mau_stickiness(spark, sf_dir, hll=False)
+
+
+@query(
+    "events_dau_mau_stickiness_hll",
+    oracle="""
+    WITH d AS (
+      SELECT CAST(ts AS DATE) AS day,
+             CAST(count(DISTINCT user_id) AS BIGINT) AS dau
+      FROM events GROUP BY 1
+    ),
+    m AS (
+      SELECT CAST(date_trunc('month', day) AS DATE) AS month,
+             CAST(sum(dau) AS BIGINT) AS sum_dau,
+             CAST(count(*) AS BIGINT) AS n_days
+      FROM d GROUP BY 1
+    ),
+    mu AS (
+      SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
+             CAST(count(DISTINCT user_id) AS BIGINT) AS mau
+      FROM events GROUP BY 1
+    )
+    SELECT m.month, mu.mau, m.sum_dau, m.n_days,
+           m.sum_dau * 1000000 // (m.n_days * mu.mau)
+             AS stickiness_micro,
+           TRUE AS hll_in_envelope
+    FROM m JOIN mu ON m.month = mu.month
+    """,
+)
+def events_dau_mau_stickiness_hll(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """DAU/MAU STICKINESS, HLL-SKETCH FORM — ONE Datasketches HLL per
+    day in a single partial-agg'd pass (sketches merge map-side), then
+    days roll up to months two ways: Σ estimate(day) for the DAU
+    numerator and estimate(hll_union_agg(day sketches)) for the MAU
+    denominator — the union over sketches is exact-over-sketches, so
+    the month sketch equals a month-grain sketch without rescanning.
+
+    Output = the exact twin's columns + ``hll_in_envelope``: the
+    per-month Σ-of-day-estimates within max(2·n_days, 2% of Σdau) —
+    per-day errors are independent, so the summed RELATIVE error
+    shrinks ~1/√n_days and 2% is a ≫3σ bound — and the union-sketch
+    MAU within max(3, 2.5%) (single sketch at lgK=14, RSE ≈0.81%, so
+    2.5% ≈ 3σ). The oracle asserts the literal TRUE; the reported
+    metric stays the exact integer-micro stickiness, so the hash also
+    re-verifies the metric."""
+    return _dau_mau_stickiness(spark, sf_dir, hll=True)
+
+
+def _dau_mau_stickiness(
+    spark: SparkSession, sf_dir: str, hll: bool
+) -> DataFrame:
+    """Per-month exact DAU/MAU stickiness; with ``hll`` the day and
+    month counts are also estimated from per-day HLL sketches and
+    checked in ``hll_in_envelope``.
+
+    The (user, day) activity table is checkpointed because its two
+    consumers are structurally different subtrees. It is the one
+    activity-sized (not rollup-sized) checkpoint: acceptable because
+    localCheckpoint stores at MEMORY_AND_DISK (spills, never OOMs), and
+    the sketch form shrinks it to |days| rows at true scale. HLL
+    updates are idempotent, so sketching the deduped table builds the
+    identical sketch."""
     ev = load_table(spark, sf_dir, "events")
-    # r15: BOTH distinct grains derive from one (user, day) activity
-    # collapse — dau = per-day row count, mau = per-month count over
-    # the (user, month) dedupe of the same table — so the corpus is
-    # scanned and distinct-expanded ONCE instead of once per grain.
-    # |users|x|days| is the standard activity-table size, far below
-    # the event count; checkpointed because the two consumers are
-    # structurally different subtrees. Scale bound (ADVICE r15): this
-    # is the one r15 checkpoint that is activity-sized rather than
-    # rollup-sized — acceptable because localCheckpoint stores at
-    # MEMORY_AND_DISK (spills, never OOMs), and at true 100 TB the
-    # documented swap is per-day HLL sketches merged upward (see
-    # docstring), which shrinks this table to |days| rows.
     ud = (
         ev.select(F.to_date("ts").alias("day"), "user_id")
         .distinct()
         .localCheckpoint()
     )
-    d = ud.groupBy("day").agg(F.count("*").alias("dau"))
-    m = d.groupBy(
-        F.date_trunc("month", "day").cast("date").alias("month")
-    ).agg(
+    day_aggs = [F.count("*").alias("dau")]
+    month_aggs = [
         F.sum("dau").cast("bigint").alias("sum_dau"),
         F.count("*").alias("n_days"),
-    )
+    ]
+    if hll:
+        day_aggs.insert(
+            0, F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("sk")
+        )
+        month_aggs += [
+            F.sum(F.hll_sketch_estimate("sk")).alias("_sum_dau_est"),
+            F.hll_sketch_estimate(F.hll_union_agg("sk", F.lit(False))).alias(
+                "_mau_est"
+            ),
+        ]
+    d = ud.groupBy("day").agg(*day_aggs)
+    m = d.groupBy(
+        F.date_trunc("month", "day").cast("date").alias("month")
+    ).agg(*month_aggs)
     mu = (
         ud.select(
             F.date_trunc("month", "day").cast("date").alias("month"),
@@ -2107,7 +2336,7 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("month")
         .agg(F.count("*").alias("mau"))
     )
-    return m.join(mu, "month").select(
+    cols = [
         "month",
         "mau",
         "sum_dau",
@@ -2115,7 +2344,17 @@ def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("sum_dau * 1000000 div (n_days * mau)").alias(
             "stickiness_micro"
         ),
-    )
+    ]
+    if hll:
+        in_env = (
+            F.abs(F.col("_sum_dau_est").cast("double") - F.col("sum_dau"))
+            <= F.greatest(2.0 * F.col("n_days"), 0.02 * F.col("sum_dau"))
+        ) & (
+            F.abs(F.col("_mau_est").cast("double") - F.col("mau"))
+            <= F.greatest(F.lit(3.0), 0.025 * F.col("mau"))
+        )
+        cols.append(in_env.alias("hll_in_envelope"))
+    return m.join(mu, "month").select(*cols)
 
 
 @query(
@@ -2161,15 +2400,75 @@ def analytics_pareto_concentration(
     rows here; bounded by entity count generally). The unpartitioned
     rank-over-summary is the sanctioned pattern — at true
     billions-of-entities scale the decile boundaries come from
-    approx_percentile over spend (the events_rfm_segmentation_approx
-    swap) instead of a global rank, and the curve is read off the same
-    way."""
+    approx_percentile over spend (the ``_approx`` form) instead of a
+    global rank, and the curve is read off the same way."""
+    return _pareto_curve(spark, sf_dir, approx=False)
+
+
+@query(
+    "analytics_pareto_concentration_approx",
+    oracle="""
+    WITH s AS (
+      SELECT o_custkey,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS spend
+      FROM orders GROUP BY 1
+    ),
+    r AS (
+      SELECT spend,
+             row_number() OVER (ORDER BY spend DESC, o_custkey) AS rk,
+             count(*) OVER () AS n_cust,
+             sum(spend) OVER () AS total,
+             sum(spend) OVER (ORDER BY spend DESC, o_custkey
+                              ROWS UNBOUNDED PRECEDING) AS cum
+      FROM s
+    )
+    SELECT CAST(decile AS INT) AS decile,
+           CAST(max(cum) AS BIGINT) AS cum_cents,
+           CAST(max(cum) * 1000000 // max(total) AS BIGINT)
+             AS cum_share_micro,
+           TRUE AS approx_in_envelope
+    FROM (SELECT cum, total,
+                 CAST(rk * 10 // n_cust AS BIGINT) AS decile
+          FROM r WHERE rk * 10 % n_cust = 0 OR rk = n_cust) x
+    GROUP BY decile
+    """,
+)
+def analytics_pareto_concentration_approx(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PARETO CURVE, APPROX-BOUNDARY FORM — decile boundaries from
+    ``percentile_approx`` (Greenwald-Khanna, one mergeable partial-agg'd
+    pass) instead of a global rank-over-summary window: at true scale
+    the unpartitioned rank is the one non-mergeable node, and the GK
+    sketch is how the same curve is read off without it. The curve
+    columns reported here are the EXACT twin's, kept solely so the hash
+    gate re-verifies the curve; the approx machinery feeds
+    ``approx_in_envelope`` — TRUE iff every GK decile boundary b_d sits
+    within max(3, 1% of n) customers of its exact rank target
+    (count(spend >= b_d) >= t_d - tol AND count(spend > b_d) <=
+    t_d + tol, t_d = d*n/10) — so a drifting sketch flips the flag and
+    the driver hash catches it. Boundaries and rank counts are bounded
+    control scalars (two 1-row collects), never a row-space join."""
+    return _pareto_curve(spark, sf_dir, approx=True)
+
+
+def _pareto_curve(spark: SparkSession, sf_dir: str, approx: bool) -> DataFrame:
+    """Exact cumulative spend share at each customer decile; with
+    ``approx`` the spend summary is checkpointed (three consumers) and
+    the GK decile boundaries' envelope check is added as
+    ``approx_in_envelope``."""
     orders = load_table(spark, sf_dir, "orders")
     s = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
         .cast("bigint")
         .alias("spend")
     )
+    extra = []
+    if approx:
+        s = s.localCheckpoint(eager=False)
+        in_env = _gk_deciles_in_envelope(s)
+        extra.append(F.lit(in_env).alias("approx_in_envelope"))
     w_rank = Window.orderBy(F.desc("spend"), F.asc("o_custkey"))
     w_all = Window.partitionBy()
     r = s.select(
@@ -2191,7 +2490,7 @@ def analytics_pareto_concentration(
     )
     return x.groupBy("decile").agg(
         F.max("cum").cast("bigint").alias("cum_cents"),
-        # DECIMAL(38,0) widening (r15 sf1 rehearsal): cum*1e6 overflows
+        # DECIMAL(38,0) widening (sf1 rehearsal): cum*1e6 overflows
         # BIGINT once the corpus' cent sum passes ~9.2e12 (sf1 is 2.3e13)
         # — DuckDB's sum() is already HUGEINT, so only Spark needed the
         # widening; decimal `div` truncates like HUGEINT `//`.
@@ -2199,6 +2498,38 @@ def analytics_pareto_concentration(
             "CAST(max(cum) AS DECIMAL(38,0)) * 1000000"
             " div CAST(max(total) AS DECIMAL(38,0))"
         ).alias("cum_share_micro"),
+        *extra,
+    )
+
+
+def _gk_deciles_in_envelope(s: DataFrame) -> bool:
+    """TRUE iff every GK decile boundary of ``spend`` sits within
+    max(3, 1% of n) customers of its exact rank target."""
+    qs = [round(1 - d / 10, 1) for d in range(1, 10)]  # 0.9 .. 0.1
+    head = s.agg(
+        F.percentile_approx("spend", qs, 10000).alias("bnd"),
+        F.count("*").alias("n"),
+    ).first()
+    bnds, n = list(head["bnd"]), int(head["n"])
+    tol = max(3, n // 100)
+    ranks = s.agg(
+        *[
+            F.sum(
+                F.when(F.col("spend") >= F.lit(int(b)), 1).otherwise(0)
+            ).alias(f"ge{d}")
+            for d, b in enumerate(bnds, start=1)
+        ],
+        *[
+            F.sum(
+                F.when(F.col("spend") > F.lit(int(b)), 1).otherwise(0)
+            ).alias(f"gt{d}")
+            for d, b in enumerate(bnds, start=1)
+        ],
+    ).first()
+    return all(
+        ranks[f"ge{d}"] >= (d * n) // 10 - tol
+        and ranks[f"gt{d}"] <= (d * n) // 10 + tol
+        for d in range(1, 10)
     )
 
 
@@ -2404,99 +2735,6 @@ def analytics_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "events_funnel_windowed",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ), c AS (
-      SELECT e.user_id, min(e.ts) AS t2
-      FROM events e JOIN v ON e.user_id = v.user_id
-      WHERE e.event_type = 'click' AND e.ts > v.t1
-        AND e.ts <= v.t1 + INTERVAL 24 HOUR
-      GROUP BY e.user_id
-    ), p AS (
-      SELECT e.user_id, min(e.ts) AS t3
-      FROM events e JOIN c ON e.user_id = c.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > c.t2
-        AND e.ts <= c.t2 + INTERVAL 24 HOUR
-      GROUP BY e.user_id
-    )
-    SELECT * FROM (
-      SELECT 1 AS stage, 'view' AS event_type,
-             (SELECT count(*) FROM v) AS n_users
-      UNION ALL
-      SELECT 2, 'click_24h', (SELECT count(*) FROM c)
-      UNION ALL
-      SELECT 3, 'purchase_24h', (SELECT count(*) FROM p)
-    )
-    """,
-)
-def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIME-BOUNDED FUNNEL — view → click → purchase where each step
-    must land within 24 HOURS of the previous step's completion (the
-    attribution-window semantics real conversion funnels use; the
-    unbounded events_funnel counts a purchase a month later, this one
-    does not). Same min-timestamp chaining as the unbounded form with
-    an upper bound per hop — the earliest-qualifying-event convention
-    makes the count deterministic.
-
-    Scale: per-stage min() collapses per user before each hop's join,
-    so every join is entity-sized and co-partitioned on user_id (three
-    stages = the same shuffle key reused; Catalyst plans one exchange
-    lineage). Windowing changes no plan shape — only the residual
-    predicate — which is exactly why funnels generalize to K stages ×
-    arbitrary windows at 100 TB."""
-    ev = load_table(spark, sf_dir, "events")
-    day_us = 24 * 3600 * 1000000
-    v = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    c = (
-        ev.where(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .where(
-            (F.col("ts") > F.col("t1"))
-            & (
-                F.unix_micros("ts")
-                <= F.unix_micros("t1") + F.lit(day_us)
-            )
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .where(
-            (F.col("ts") > F.col("t2"))
-            & (
-                F.unix_micros("ts")
-                <= F.unix_micros("t2") + F.lit(day_us)
-            )
-        )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    rows = [
-        (1, "view", v),
-        (2, "click_24h", c),
-        (3, "purchase_24h", p),
-    ]
-    out = None
-    for stage, name, df in rows:
-        one = df.agg(F.count("*").alias("n_users")).select(
-            F.lit(stage).alias("stage"),
-            F.lit(name).alias("event_type"),
-            "n_users",
-        )
-        out = one if out is None else out.unionAll(one)
-    return out
-
-
-@query(
     "events_forecast_seasonal_naive",
     oracle="""
     WITH d AS (
@@ -2532,23 +2770,88 @@ def events_forecast_seasonal_naive(
 
     Scale: the corpus collapses to the per-day series in one shuffle;
     both lag forecasts and the error rollup run over the calendar
-    summary. Per-series forecasting at scale partitions the same plan
-    by series key (the window gains a partitionBy and nothing else
-    changes) — millions of independent series parallelize trivially;
-    it is long single series that do not."""
+    summary. The per-series form (``_series``) partitions the same plan
+    by series key — millions of independent series parallelize
+    trivially; it is long single series that do not."""
+    return _seasonal_naive_backtest(spark, sf_dir, per_type=False)
+
+
+@query(
+    "events_forecast_seasonal_naive_series",
+    oracle="""
+    WITH d AS (
+      SELECT event_type,
+             CAST(date_trunc('day', ts) AS DATE) AS day,
+             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events GROUP BY 1, 2
+    ),
+    j AS (
+      SELECT event_type, day, cents,
+             lag(cents, 7) OVER win AS forecast,
+             lag(cents, 1) OVER win AS naive
+      FROM d
+      WINDOW win AS (PARTITION BY event_type ORDER BY day)
+    )
+    SELECT event_type,
+           CAST(count(*) AS BIGINT) AS n_days,
+           CAST(sum(abs(cents - forecast)) AS BIGINT)
+             AS seasonal_abs_err,
+           CAST(sum(abs(cents - naive)) AS BIGINT) AS naive_abs_err,
+           CAST(sum(abs(cents - forecast)) * 1000000
+             // nullif(sum(abs(cents - naive)), 0) AS BIGINT)
+             AS mase_micro
+    FROM j WHERE forecast IS NOT NULL AND naive IS NOT NULL
+    GROUP BY event_type
+    """,
+)
+def events_forecast_seasonal_naive_series(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PER-SERIES FORECAST BACKTEST — one MASE row PER EVENT TYPE,
+    forecast(d) = actual(d−7) vs the 1-day naive, exact integer error
+    cents, one scaled division per series. Both lag forecasts ride ONE
+    window keyed by the series, so millions of independent series
+    spread across the cluster instead of serializing through the
+    global form's single-partition sort. The MASE division is
+    nullif-guarded against a perfectly-flat series on BOTH engines."""
+    return _seasonal_naive_backtest(spark, sf_dir, per_type=True)
+
+
+def _seasonal_naive_backtest(
+    spark: SparkSession, sf_dir: str, per_type: bool
+) -> DataFrame:
+    """Seasonal-naive (lag 7) vs naive (lag 1) MASE over daily value
+    cents: one global calendar series, or one series per event type
+    (day from ``date_trunc``, a BIGINT MASE guarded against a zero
+    naive error). The MASE division is DECIMAL(38,0)-widened: error-cent
+    sums are unbounded in data volume, and *1e6 passes BIGINT range past
+    ~sf3 of the global series."""
     ev = load_table(spark, sf_dir, "events")
-    d = ev.groupBy(F.to_date("ts").alias("day")).agg(
+    keys = ["event_type"] if per_type else []
+    day = (
+        F.date_trunc("day", "ts").cast("date") if per_type else F.to_date("ts")
+    )
+    d = ev.groupBy(*keys, day.alias("day")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
         .cast("bigint")
         .alias("cents")
     )
-    w = Window.orderBy("day")
+    w = Window.partitionBy(*keys).orderBy("day")
     j = d.select(
+        *keys,
         "cents",
         F.lag("cents", 7).over(w).alias("forecast"),
         F.lag("cents", 1).over(w).alias("naive"),
     ).where(F.col("forecast").isNotNull() & F.col("naive").isNotNull())
-    return j.agg(
+    num = "CAST(sum(abs(cents - forecast)) AS DECIMAL(38,0)) * 1000000"
+    den = "CAST(sum(abs(cents - naive)) AS DECIMAL(38,0))"
+    mase = (
+        f"CAST({num} div nullif({den}, 0) AS BIGINT)"
+        if per_type
+        else f"{num} div {den}"
+    )
+    return j.groupBy(*keys).agg(
         F.count("*").alias("n_days"),
         F.sum(F.abs(F.col("cents") - F.col("forecast")))
         .cast("bigint")
@@ -2556,12 +2859,7 @@ def events_forecast_seasonal_naive(
         F.sum(F.abs(F.col("cents") - F.col("naive")))
         .cast("bigint")
         .alias("naive_abs_err"),
-        # DECIMAL(38,0) widening (r15): error-cent sums are unbounded in
-        # data volume; *1e6 passes BIGINT range past ~sf3 of this series
-        F.expr(
-            "CAST(sum(abs(cents - forecast)) AS DECIMAL(38,0)) * 1000000"
-            " div CAST(sum(abs(cents - naive)) AS DECIMAL(38,0))"
-        ).alias("mase_micro"),
+        F.expr(mase).alias("mase_micro"),
     )
 
 
@@ -3110,4 +3408,782 @@ def agg_incremental_moments_merge(
             "(sum(n) * sum(s2) - sum(s1) * sum(s1))"
             " div (sum(n) * (sum(n) - 1))"
         ).alias("var_c2"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Bollinger bands and local peaks over daily event volume (global or per type)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "events_bollinger_bands",
+    oracle="""
+    WITH d AS (
+      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             CAST(count(*) AS BIGINT) AS x
+      FROM events GROUP BY 1
+    ),
+    w AS (
+      SELECT day, x,
+             CAST(count(*) OVER win AS BIGINT) AS n,
+             CAST(sum(x) OVER win AS BIGINT) AS s,
+             CAST(sum(x * x) OVER win AS BIGINT) AS q
+      FROM d
+      WINDOW win AS (ORDER BY day
+                     ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    )
+    SELECT day, x AS n_events, n AS win_n,
+           CAST(s * 1000 // n AS BIGINT) AS mean_milli,
+           CAST(n * q - s * s AS BIGINT) AS var_num,
+           (x * n - s) > 0
+             AND (x * n - s) * (x * n - s) > 4 * (n * q - s * s)
+             AS breach_hi,
+           (x * n - s) < 0
+             AND (x * n - s) * (x * n - s) > 4 * (n * q - s * s)
+             AS breach_lo
+    FROM w
+    """,
+)
+def events_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BOLLINGER BANDS over daily event volume — the rolling ±2σ
+    envelope ops dashboards draw, with the breach test in EXACT
+    integers: over a 7-day trailing window with running sums S, Q and
+    count n, |x − μ| > 2σ is cross-multiplied to
+    (x·n − S)² > 4·(n·Q − S²) — no division, no sqrt, no float
+    anywhere (the mean is reported as one scaled div; the variance
+    NUMERATOR n·Q − S² is emitted raw). The sign of (x·n − S) splits
+    hi/lo breaches.
+
+    Scale: the corpus collapses to one row per day in a single
+    partial-agg'd shuffle; the three window aggregates share ONE
+    7-row frame over the calendar summary. The per-series form
+    (``_series``) adds partitionBy to the same window — the shuffle is
+    then keyed, not global."""
+    return _bollinger_bands(spark, sf_dir, keys=[])
+
+
+@query(
+    "events_bollinger_bands_series",
+    oracle="""
+    WITH d AS (
+      SELECT event_type,
+             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             CAST(count(*) AS BIGINT) AS x
+      FROM events GROUP BY 1, 2
+    ),
+    w AS (
+      SELECT event_type, day, x,
+             CAST(count(*) OVER win AS BIGINT) AS n,
+             CAST(sum(x) OVER win AS BIGINT) AS s,
+             CAST(sum(x * x) OVER win AS BIGINT) AS q
+      FROM d
+      WINDOW win AS (PARTITION BY event_type ORDER BY day
+                     ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    )
+    SELECT event_type, day, x AS n_events, n AS win_n,
+           CAST(s * 1000 // n AS BIGINT) AS mean_milli,
+           CAST(n * q - s * s AS BIGINT) AS var_num,
+           (x * n - s) > 0
+             AND (x * n - s) * (x * n - s) > 4 * (n * q - s * s)
+             AS breach_hi,
+           (x * n - s) < 0
+             AND (x * n - s) * (x * n - s) > 4 * (n * q - s * s)
+             AS breach_lo
+    FROM w
+    """,
+)
+def events_bollinger_bands_series(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PER-SERIES BOLLINGER BANDS — the exact-integer ±2σ breach test of
+    ``events_bollinger_bands`` evaluated per EVENT TYPE over each type's
+    own daily-volume series: the three window aggregates share ONE
+    keyed 7-row frame, so every series' envelope is an independent
+    task. Counts are calendar-bounded per series (n ≤ 7, x ≤ series-day
+    volume), so the breach arithmetic stays comfortably in BIGINT."""
+    return _bollinger_bands(spark, sf_dir, keys=["event_type"])
+
+
+def _bollinger_bands(
+    spark: SparkSession, sf_dir: str, keys: list[str]
+) -> DataFrame:
+    """Trailing 7-day Bollinger breach test over daily event counts, one
+    series per ``keys`` value (one global series when empty)."""
+    d = _daily_event_counts(spark, sf_dir, keys)
+    win = (
+        Window.partitionBy(*keys)
+        .orderBy("day")
+        .rowsBetween(-6, Window.currentRow)
+    )
+    w = d.select(
+        *keys,
+        "day",
+        "x",
+        F.count("*").over(win).cast("bigint").alias("n"),
+        F.sum("x").over(win).cast("bigint").alias("s"),
+        F.sum(F.col("x") * F.col("x")).over(win).cast("bigint").alias("q"),
+    )
+    dev = F.col("x") * F.col("n") - F.col("s")
+    var4 = 4 * (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
+    return w.select(
+        *keys,
+        "day",
+        F.col("x").alias("n_events"),
+        F.col("n").alias("win_n"),
+        F.expr("CAST(s * 1000 div n AS BIGINT)").alias("mean_milli"),
+        (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
+        .cast("bigint")
+        .alias("var_num"),
+        ((dev > 0) & (dev * dev > var4)).alias("breach_hi"),
+        ((dev < 0) & (dev * dev > var4)).alias("breach_lo"),
+    )
+
+
+def _daily_event_counts(
+    spark: SparkSession, sf_dir: str, keys: list[str]
+) -> DataFrame:
+    """(*keys, day, x): events per day, per ``keys`` value."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(*keys, F.date_trunc("day", "ts").alias("day")).agg(
+        F.count("*").cast("bigint").alias("x")
+    )
+
+
+@query(
+    "events_peak_detection",
+    oracle="""
+    WITH d AS (
+      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             CAST(count(*) AS BIGINT) AS x
+      FROM events GROUP BY 1
+    ),
+    w AS (
+      SELECT day, x,
+             lag(x) OVER win AS xp, lead(x) OVER win AS xn,
+             min(x) OVER (win ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
+               AS lmin,
+             min(x) OVER (win ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING)
+               AS rmin
+      FROM d
+      WINDOW win AS (ORDER BY day)
+    )
+    SELECT day, x AS n_events,
+           CAST(lmin AS BIGINT) AS left_min3,
+           CAST(rmin AS BIGINT) AS right_min3,
+           CAST(x - greatest(lmin, rmin) AS BIGINT) AS prominence
+    FROM w
+    WHERE xp IS NOT NULL AND xn IS NOT NULL AND x > xp AND x > xn
+    """,
+)
+def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LOCAL PEAK DETECTION with windowed prominence — the signal-
+    processing verb behind spike triage: a day is a peak when it
+    strictly exceeds both neighbors (ties lose on both sides —
+    deterministic; series edges are never peaks), and its ±3-day
+    prominence is the height above the HIGHER of the two flanking
+    minima (the scipy find_peaks 'prominence' idea, window-bounded so
+    it stays one pass — true prominence chases monotone runs
+    arbitrarily far, which is the gaps-and-islands construction if
+    needed). All exact integers; four window functions share ONE
+    ordered frame spec.
+
+    Scale: daily collapse once; every window rides the same
+    calendar-bounded sort. The per-series form (``_series``) adds
+    partitionBy."""
+    return _peak_detection(spark, sf_dir, keys=[])
+
+
+@query(
+    "events_peak_detection_series",
+    oracle="""
+    WITH d AS (
+      SELECT event_type,
+             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+             CAST(count(*) AS BIGINT) AS x
+      FROM events GROUP BY 1, 2
+    ),
+    w AS (
+      SELECT event_type, day, x,
+             lag(x) OVER win AS xp, lead(x) OVER win AS xn,
+             min(x) OVER (win ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
+               AS lmin,
+             min(x) OVER (win ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING)
+               AS rmin
+      FROM d
+      WINDOW win AS (PARTITION BY event_type ORDER BY day)
+    )
+    SELECT event_type, day, x AS n_events,
+           CAST(lmin AS BIGINT) AS left_min3,
+           CAST(rmin AS BIGINT) AS right_min3,
+           CAST(x - greatest(lmin, rmin) AS BIGINT) AS prominence
+    FROM w
+    WHERE xp IS NOT NULL AND xn IS NOT NULL AND x > xp AND x > xn
+    """,
+)
+def events_peak_detection_series(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PER-SERIES PEAK DETECTION — ``events_peak_detection``'s strict
+    local maxima with ±3-day windowed prominence, evaluated
+    independently per EVENT TYPE (each series' edges are never peaks —
+    the lag/lead NULL guard is per series, which is the semantic
+    difference from slicing the global result). All four window
+    functions share ONE keyed ordered frame spec, so a million series
+    is a million small sorts, not one big one."""
+    return _peak_detection(spark, sf_dir, keys=["event_type"])
+
+
+def _peak_detection(
+    spark: SparkSession, sf_dir: str, keys: list[str]
+) -> DataFrame:
+    """Strict local maxima of daily event counts with ±3-day
+    prominence, one series per ``keys`` value (one global series when
+    empty)."""
+    d = _daily_event_counts(spark, sf_dir, keys)
+    win = Window.partitionBy(*keys).orderBy("day")
+    w = d.select(
+        *keys,
+        "day",
+        "x",
+        F.lag("x").over(win).alias("xp"),
+        F.lead("x").over(win).alias("xn"),
+        F.min("x").over(win.rowsBetween(-3, -1)).alias("lmin"),
+        F.min("x").over(win.rowsBetween(1, 3)).alias("rmin"),
+    )
+    return w.where(
+        F.col("xp").isNotNull()
+        & F.col("xn").isNotNull()
+        & (F.col("x") > F.col("xp"))
+        & (F.col("x") > F.col("xn"))
+    ).select(
+        *keys,
+        "day",
+        F.col("x").alias("n_events"),
+        F.col("lmin").cast("bigint").alias("left_min3"),
+        F.col("rmin").cast("bigint").alias("right_min3"),
+        (F.col("x") - F.greatest("lmin", "rmin"))
+        .cast("bigint")
+        .alias("prominence"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Calendar heatmap matrix (dow × hour activity grid)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "events_calendar_heatmap",
+    oracle="""
+    SELECT CAST(date_part('dow', ts) + 1 AS BIGINT) AS dow,
+           CAST(date_part('hour', ts) AS BIGINT) AS hour,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             AS value_cents
+    FROM events GROUP BY 1, 2
+    """,
+)
+def events_calendar_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CALENDAR HEATMAP MATRIX — the dow × hour activity grid every
+    operations dashboard renders (when is the system busy; when do
+    humans vs crons act): ≤7×24 cells with event counts, distinct
+    actors, and exact value cents. Trivial by construction and
+    included precisely because it is load-bearing: this is the
+    highest-frequency report shape in practice, and the dow
+    convention (Spark dayofweek 1=Sunday ⇄ DuckDB dow+1) is the
+    cross-engine trap the suite pins once so every future calendar id
+    inherits it.
+
+    Scale: one partial-agg'd (dow, hour) collapse — 168 cells
+    regardless of corpus size; the distinct-user count is the one
+    shuffle-heavy node, with the HLL form (``_hll``) for unbounded
+    actor domains."""
+    return _calendar_heatmap(spark, sf_dir, hll=False)
+
+
+@query(
+    "events_calendar_heatmap_hll",
+    oracle="""
+    SELECT CAST(date_part('dow', ts) + 1 AS BIGINT) AS dow,
+           CAST(date_part('hour', ts) AS BIGINT) AS hour,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             AS value_cents,
+           TRUE AS hll_in_envelope
+    FROM events GROUP BY 1, 2
+    """,
+)
+def events_calendar_heatmap_hll(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """CALENDAR HEATMAP, HLL FORM — one Datasketches HLL per (dow, hour)
+    cell built in the same partial-agg'd pass, so raw user ids never
+    need to shuffle in the pure sketch form; ≤168 sketches merge
+    map-side. The registered plan also keeps the exact count_distinct
+    in the same aggregate, solely so the DuckDB hash gate can verify
+    the grid — that exact column does shuffle raw user ids, so this
+    id's benched plan is the verification form; the 100 TB scale path
+    drops the exact column and keeps only the sketch estimate. Output =
+    the exact twin's columns + ``hll_in_envelope``: every cell's
+    estimate within max(3, 2.5% of exact) (lgK=14, RSE ≈ 0.81%, so
+    2.5% ≈ 3σ). The oracle asserts the literal TRUE; the reported
+    n_users stays the exact count, so the hash also re-verifies the
+    grid itself."""
+    return _calendar_heatmap(spark, sf_dir, hll=True)
+
+
+def _calendar_heatmap(spark: SparkSession, sf_dir: str, hll: bool) -> DataFrame:
+    """(dow, hour) cells: events, exact distinct users, value cents;
+    with ``hll`` also an lgK=14 HLL estimate of the distinct users in
+    the same aggregate, reported as the ``hll_in_envelope`` flag."""
+    ev = load_table(spark, sf_dir, "events")
+    aggs = [
+        F.count("*").cast("bigint").alias("n"),
+        F.count_distinct("user_id").cast("bigint").alias("n_users"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("bigint")
+        .alias("value_cents"),
+    ]
+    if hll:
+        aggs.append(
+            F.hll_sketch_estimate(
+                F.hll_sketch_agg(F.col("user_id"), F.lit(14))
+            ).alias("_est")
+        )
+    cell = ev.groupBy(
+        F.dayofweek("ts").cast("bigint").alias("dow"),
+        F.hour("ts").cast("bigint").alias("hour"),
+    ).agg(*aggs)
+    if not hll:
+        return cell
+    in_env = F.abs(
+        F.col("_est").cast("double") - F.col("n_users")
+    ) <= F.greatest(F.lit(3.0), 0.025 * F.col("n_users"))
+    return cell.select(
+        "dow", "hour", "n", "n_users", "value_cents",
+        in_env.alias("hll_in_envelope"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Per-user behavioral entropy (exact or CMS-head histogram)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "events_user_entropy",
+    oracle="""
+    WITH c AS (
+      SELECT user_id, event_type, count(*) AS c
+      FROM events GROUP BY 1, 2
+    ),
+    d AS (
+      SELECT user_id, c,
+             sum(c) OVER (PARTITION BY user_id) AS n
+      FROM c
+    ),
+    l AS (
+      SELECT user_id, c, n,
+             CAST(round(ln(CAST(c AS DOUBLE) / n) * 1000000) AS BIGINT)
+               AS lnm
+      FROM d
+    )
+    SELECT user_id,
+           CAST(sum(c) AS BIGINT) AS n_events,
+           CAST(count(*) AS BIGINT) AS n_types,
+           CAST((-sum(c * lnm)) // sum(c) AS BIGINT) AS h_micro
+    FROM l GROUP BY user_id
+    """,
+)
+def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-USER BEHAVIORAL ENTROPY — Shannon entropy of each user's
+    event-type distribution in integer MICRO-NATS (H = −Σ p·ln p): the
+    behavioral-diversity feature that separates single-action bots
+    (H=0) from organic multi-surface users, and the same measure
+    curation pipelines run over source/format distributions.
+
+    Scale: one partial-agg'd (user, type) shuffle collapses the corpus
+    to ≤ |users|·|types| rows; the window and final rollup run on that
+    summary sharing the user partitioning. At unbounded type domains
+    the exact count vector swaps for a CMS/top-k head plus a tail
+    bucket (the ``_cms`` form) — entropy needs only the histogram,
+    never raw events."""
+    ev = load_table(spark, sf_dir, "events")
+    c = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
+    return _entropy_micro(c, "n_types", "h_micro")
+
+
+_ENTROPY_HEAD_K = 3
+
+
+def _entropy_cms_oracle(k: int = _ENTROPY_HEAD_K) -> str:
+    return f"""
+    WITH h AS (
+      SELECT event_type, CAST(r AS INT) AS r,
+             {cms.cms_bucket_sql("event_type", "r")} AS bucket
+      FROM events, UNNEST(range(0, {cms.CMS_D})) AS t(r)
+    ),
+    sk AS (SELECT r, bucket, count(*) AS c FROM h GROUP BY ALL),
+    kb AS (
+      SELECT event_type, CAST(r AS INT) AS r,
+             {cms.cms_bucket_sql("event_type", "r")} AS bucket
+      FROM (SELECT DISTINCT event_type FROM events),
+           UNNEST(range(0, {cms.CMS_D})) AS t(r)
+    ),
+    est AS (SELECT event_type, min(c) AS cms_est
+            FROM kb JOIN sk USING (r, bucket) GROUP BY 1),
+    head AS (SELECT event_type FROM est
+             ORDER BY cms_est DESC, event_type LIMIT {k}),
+    red AS (
+      SELECT user_id,
+             CASE WHEN event_type IN (SELECT event_type FROM head)
+                  THEN event_type ELSE '__tail__' END AS bucket_type
+      FROM events
+    ),
+    c AS (
+      SELECT user_id, bucket_type, count(*) AS c
+      FROM red GROUP BY 1, 2
+    ),
+    d AS (
+      SELECT user_id, c,
+             sum(c) OVER (PARTITION BY user_id) AS n
+      FROM c
+    ),
+    l AS (
+      SELECT user_id, c, n,
+             CAST(round(ln(CAST(c AS DOUBLE) / n) * 1000000) AS BIGINT)
+               AS lnm
+      FROM d
+    )
+    SELECT user_id,
+           CAST(sum(c) AS BIGINT) AS n_events,
+           CAST(count(*) AS BIGINT) AS n_buckets,
+           CAST((-sum(c * lnm)) // sum(c) AS BIGINT) AS h_head_micro
+    FROM l GROUP BY user_id
+    """
+
+
+@query("events_user_entropy_cms", oracle=_entropy_cms_oracle())
+def events_user_entropy_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PER-USER ENTROPY, CMS-HEAD FORM — at 100 TB the exact per-(user,
+    type) count vector is unbounded state, so the histogram is reduced
+    to a HEAD of globally-heavy types plus one tail bucket — per-user
+    state becomes K+1 counters regardless of domain size. The head
+    comes from the md5-derived count-min sketch (operators/cms.py: one
+    posexplode pass builds the 4x256 cell table map-side; point queries
+    broadcast it) — top-K=3 by (estimate DESC, type ASC), which is
+    deterministic and ENGINE-NEUTRAL, so no envelope flag is needed:
+    the DuckDB oracle replays sketch, head selection, reduced
+    histogram, and micro-nat entropy end-to-end and the hash verifies
+    the whole construction. The head list is a bounded control collect
+    (<= K+heap candidates; at scale the candidate set comes from the
+    same CMS+heap pass)."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type"
+    )
+    cells = cms.cms_cells(ev.select("event_type"))
+    kb = cms.cms_pairs(ev.select("event_type").distinct())
+    est = (
+        kb.join(F.broadcast(cells), ["r", "bucket"])
+        .groupBy("event_type")
+        .agg(F.min("c").alias("cms_est"))
+    )
+    head = [
+        r["event_type"]
+        for r in est.orderBy(
+            F.desc("cms_est"), F.asc("event_type")
+        ).limit(_ENTROPY_HEAD_K).collect()
+    ]
+    red = ev.select(
+        "user_id",
+        F.when(
+            F.col("event_type").isin(head), F.col("event_type")
+        )
+        .otherwise(F.lit("__tail__"))
+        .alias("bucket_type"),
+    )
+    c = red.groupBy("user_id", "bucket_type").agg(
+        F.count("*").alias("c")
+    )
+    return _entropy_micro(c, "n_buckets", "h_head_micro")
+
+
+def _entropy_micro(c: DataFrame, n_name: str, h_name: str) -> DataFrame:
+    """Per-user entropy in integer micro-nats from (user_id, c) counts:
+    each ln(c/n) is rounded ONCE to integer micro-nats (the single
+    correctly-rounded division feeding ln makes the input identical
+    across engines), then c-weighted integer sums and one positive
+    div, where DuckDB's floor-div and Spark's trunc-div agree — no
+    double ever sums, so the hash is order-free."""
+    d = c.withColumn(
+        "n", F.sum("c").over(Window.partitionBy("user_id"))
+    )
+    lnm = F.expr(
+        "CAST(round(ln(CAST(c AS DOUBLE) / n) * 1000000) AS BIGINT)"
+    )
+    return (
+        d.select("user_id", "c", lnm.alias("lnm"))
+        .groupBy("user_id")
+        .agg(
+            F.sum("c").cast("bigint").alias("n_events"),
+            F.count("*").cast("bigint").alias(n_name),
+            F.expr("CAST((-sum(c * lnm)) div sum(c) AS BIGINT)").alias(
+                h_name
+            ),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Synchronous label propagation (3 unrolled rounds, or iterated to its
+# limit set)
+# ---------------------------------------------------------------------------
+_LP_EDGES_SQL = """
+    ed AS (
+      SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
+      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+    ), e AS (
+      SELECT src, dst FROM ed UNION ALL SELECT dst, src FROM ed
+    )
+"""
+
+
+def lp_initial_labels(sym: DataFrame) -> DataFrame:
+    """Every node starts as its own community (label = node id)."""
+    return (
+        sym.select("src")
+        .distinct()
+        .select(F.col("src").alias("node"), F.col("src").alias("lab"))
+    )
+
+
+def lp_vote_round(
+    sym: DataFrame, labels: DataFrame, broadcast_labels: bool = False
+) -> DataFrame:
+    """One synchronous LP round over a symmetric edge list: each node
+    adopts its neighbors' most frequent label, ties to the smallest —
+    deterministic, so both the 3-round unrolled query and the
+    converged loop (lp_converged_labels) replay identically.
+
+    ``broadcast_labels=True`` is the iterated-loop path: the label
+    table is node-sized and each loop round's labels are checkpointed
+    (carry no stats — AQE would never pick the broadcast itself,
+    the bfs_distances rule), so broadcasting it turns the per-round
+    edge shuffle into a stationary-edges broadcast join; only the
+    much smaller (node, lab) vote pairs ever shuffle. The unrolled
+    3-round form keeps the default: its labels are a lazy intermediate
+    inside one fused plan, and broadcasting would materialize them."""
+    lab = F.broadcast(labels) if broadcast_labels else labels
+    votes = (
+        sym.join(lab, sym["dst"] == lab["node"])
+        .groupBy(sym["src"].alias("vnode"), "lab")
+        .agg(F.count("*").alias("votes"))
+    )
+    # Deterministic argmax via the row_number window (matches the
+    # QUALIFY oracle form). Measured note: a sort-free
+    # min_by(lab, struct(-votes, lab)) aggregate looks cheaper on paper
+    # but plans as ObjectHashAggregate outside whole-stage codegen and
+    # ran ~4x SLOWER at sf0.1 — the sort window stays codegen'd.
+    w = Window.partitionBy("vnode").orderBy(F.desc("votes"), "lab")
+    return (
+        votes.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select(F.col("vnode").alias("node"), "lab")
+    )
+
+
+def _lp_round_sql(prev: str, cur: str) -> str:
+    """One synchronous LP round: adopt the most frequent neighbor label,
+    ties to the lexicographically smallest — fully deterministic."""
+    return f"""
+    {cur} AS (
+      SELECT e.src AS node, l.lab
+      FROM e JOIN {prev} l ON l.node = e.dst
+      GROUP BY e.src, l.lab
+      QUALIFY row_number() OVER (PARTITION BY e.src
+                                 ORDER BY count(*) DESC, l.lab) = 1
+    )"""
+
+
+@query(
+    "graph_label_propagation",
+    oracle=f"""
+    WITH {_LP_EDGES_SQL},
+    l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e),
+    {_lp_round_sql('l0', 'l1')},
+    {_lp_round_sql('l1', 'l2')},
+    {_lp_round_sql('l2', 'l3')}
+    SELECT lab AS community, CAST(count(*) AS BIGINT) AS n_members,
+           min(node) AS min_member, max(node) AS max_member
+    FROM l3 GROUP BY lab
+    """,
+)
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community detection by SYNCHRONOUS label propagation (3 rounds)
+    over the customer-supplier co-order graph: every node adopts its
+    neighbors' most frequent label each round, ties broken to the
+    smallest label — which makes the normally run-order-dependent LP
+    algorithm fully deterministic, so the oracle can replay it as THREE
+    UNROLLED SQL rounds (aggregation inside a recursive CTE is not
+    portable; unrolling is) and hash-check the resulting community
+    histogram end-to-end. Asynchronous LP converges faster but is
+    schedule-dependent — the sync variant is the one a distributed
+    engine actually runs (Pregel supersteps).
+
+    Scale: each round is edges ⋈ labels (both shuffled on the same key
+    — co-partitioned across rounds) + a partial-agg'd vote count + a
+    per-node argmax window. The fused 3-round lazy plan avoids
+    per-round materialization; production iterate-to-convergence swaps
+    to the checkpointed-loop pattern of graph_pagerank (checkpoint
+    every ~5 rounds, broadcast OFF for the label side since it is
+    node-sized). Labels are node ids — width-bounded state, no
+    frontier blowup."""
+    sym = _coorder_edges(spark, sf_dir)
+    labels = lp_initial_labels(sym)
+    for _ in range(3):
+        labels = lp_vote_round(sym, labels)
+    return _community_sizes(labels)
+
+
+def _lp_step_checkpoint(nxt2: DataFrame, labels: DataFrame):
+    """(node, lab, prev) eagerly checkpointed with the changed-label
+    count OBSERVED on the materialization pass itself — the
+    connected-components idiom (operators/dedup.py): convergence
+    detection rides the checkpoint action instead of paying a separate
+    node-keyed join+count action per step (the loop's fixed cost is its
+    eager actions)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    step = (
+        nxt2.join(
+            labels.select("node", F.col("lab").alias("prev")), "node"
+        )
+        .observe(
+            obs,
+            F.sum((F.col("lab") != F.col("prev")).cast("long")).alias(
+                "changed"
+            ),
+        )
+        .localCheckpoint()
+    )
+    return step, int(obs.get["changed"] or 0)
+
+
+def lp_converged_labels(
+    sym: DataFrame, max_rounds: int = 10
+) -> tuple[DataFrame, int, str]:
+    """Synchronous label propagation iterated to its LIMIT SET:
+    either a fixed point (no node changes its label) or the period-2
+    limit cycle synchronous LP is known to enter on bipartite structure
+    (Raghavan et al. 2007 note the oscillation; the co-order
+    customer-supplier graph here IS bipartite, and measurably settles
+    into all-nodes-flip-every-round by round ~4). Returns
+    (labels, rounds_run, stop_reason in {'fixed_point','cycle','cap'}).
+
+    The loop advances TWO votes per step — labels_{t+2} =
+    vote(vote(labels_t)) as ONE fused lazy plan with a single eager
+    localCheckpoint — because comparing labels_{t+2} against labels_t
+    detects BOTH stop conditions in one node-keyed count join (equal ∧
+    fixed point, equal ∧ 2-cycle); one extra lazy vote then separates
+    the two. Halving the checkpoint/count cadence matters: eager
+    materialization is the loop's fixed cost (BFS discipline —
+    operators/graph.py:bfs_distances, lineage O(1), no session-conf
+    mutation, AQE right-sizes the per-round shuffles).
+
+    On a 2-cycle the returned labels are canonicalized as the per-node
+    MIN over the two phases, so the result is a function of the graph,
+    not of which phase the detector happened to stop in."""
+    from pyspark.sql import Observation
+
+    # Node count for the broadcast gate rides the init checkpoint's own
+    # materialization — no separate count() action.
+    obs0 = Observation()
+    labels = (
+        lp_initial_labels(sym)
+        .observe(obs0, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    # Size-gate the per-round broadcast of the node-sized label table
+    # (checkpointed frames carry no stats, so the explicit hint is the
+    # only way — the bfs_distances rule); beyond the gate fall back to
+    # the plain co-partitioned shuffle join.
+    bcast = int(obs0.get["n"]) <= 2_000_000
+    rounds = 0
+    while rounds + 2 <= max_rounds:
+        step, changed = _lp_step_checkpoint(
+            lp_vote_round(sym, lp_vote_round(sym, labels, bcast), bcast),
+            labels,
+        )
+        rounds += 2
+        nxt2 = step.select("node", "lab")
+        if changed == 0:
+            # limit set reached at period 1 or 2: ONE more vote — its
+            # phase comparison also observed on its own checkpoint.
+            stepped, moved = _lp_step_checkpoint(
+                lp_vote_round(sym, nxt2, bcast), nxt2
+            )
+            if moved == 0:
+                return nxt2, rounds, "fixed_point"
+            # 2-cycle: canonicalize as the per-node min over the two
+            # phases — both already sit on the stepped checkpoint
+            # (lab = phase b, prev = phase a), so no extra join.
+            canon = stepped.select(
+                "node", F.least("lab", "prev").alias("lab")
+            )
+            return canon, rounds, "cycle"
+        labels = nxt2
+    return labels, rounds, "cap"
+
+
+@query("graph_label_propagation_converged")
+def graph_label_propagation_converged(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Community detection by synchronous label propagation iterated TO
+    ITS LIMIT SET with delta-count early exit — the production
+    iteration story for the graph tier (graph_label_propagation is the
+    3-round unrolled, oracle-checkable form; this one runs until the
+    labeling stops evolving: fixed point, or the period-2 limit cycle
+    synchronous LP provably enters on bipartite graphs like this
+    customer-supplier one, canonicalized as per-node min over the two
+    phases; capped at 10 rounds as the backstop).
+
+    Rows-only by design: the round count is data-dependent, so the
+    result isn't expressible as fixed SQL (aggregation inside a
+    recursive CTE is not portable). Laws pytest-pinned instead: (1)
+    limit-set — a manual replay confirms labels_{t} == labels_{t-2} at the reported round and the
+    canonical output equals the min over the two phases; (2) a
+    fixed-point stop admits no further label change; (3) the
+    registered query reports the loop's own rounds/reason.
+
+    Scale: each step is TWO fused vote rounds (edges-with-labels
+    shuffle + partial-agg'd vote count + per-node argmax, exactly the
+    unrolled form's plan) behind one eager checkpoint and one
+    node-keyed count join; quiet graphs pay their mixing time, not a
+    configured worst case, and the emitted n_rounds/stop_reason
+    columns make truncation observable downstream.
+
+    Cost note: this corpus cycles at round 6, so the
+    loop pays ~2x the unrolled 3-round form by construction — the
+    honest price of convergence-driven iteration, linear per round
+    with the early exit, not a scale defect."""
+    sym = _coorder_edges(spark, sf_dir)
+    labels, rounds, reason = lp_converged_labels(sym, max_rounds=10)
+    return (
+        _community_sizes(labels)
+        .withColumn("n_rounds", F.lit(rounds).cast("int"))
+        .withColumn("stop_reason", F.lit(reason))
+    )
+
+
+def _community_sizes(labels: DataFrame) -> DataFrame:
+    """Per-community member count and min/max member node."""
+    return labels.groupBy(F.col("lab").alias("community")).agg(
+        F.count("*").cast("long").alias("n_members"),
+        F.min("node").alias("min_member"),
+        F.max("node").alias("max_member"),
     )

@@ -18,15 +18,15 @@ from __future__ import annotations
 from kdcloganalyzer_spark import appcache
 
 import os
-import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.operators.sessionize import sessionize
 from kdcloganalyzer_spark.plans.registry import query
 from kdcloganalyzer_spark.sources.kdc_log import read_log_lines, read_log_lines_raw
 from kdcloganalyzer_spark.sources.kdc_synth import (
+    records_for_sf,
     synth_dir_for_sf,
     synth_path_for_sf,
 )
@@ -105,17 +105,21 @@ def kdc_records_parquet(spark: SparkSession, sf_dir: str) -> str:
         # consumer (≈80 kdc ids) paid 18 scan tasks per pass — measured
         # 0.42 → 0.24 s per records aggregate after compaction. Width
         # scales with the corpus (~2M records ≈ 100 MB per file, n from
-        # the synth dir name); repartition (not coalesce) keeps the
-        # one-time parse itself parallel. Row content unchanged — no
-        # RECORDS_VERSION bump.
-        m = re.search(r"_(\d+)$", os.path.basename(synth_path_for_sf(sf_dir)))
-        n_rec = int(m.group(1)) if m else 1_000_000
+        # the corpus's own sizing rule); repartition (not coalesce)
+        # keeps the one-time parse itself parallel. Row content
+        # unchanged — no RECORDS_VERSION bump.
         kdc_records(spark, sf_dir).withColumn(
             "ts", F.col("ts").cast("timestamp_ntz")
-        ).repartition(max(1, n_rec // 2_000_000)).write.mode(
+        ).repartition(records_files_for_sf(sf_dir)).write.mode(
             "overwrite"
         ).parquet(out)
     return out
+
+
+def records_files_for_sf(sf_dir: str) -> int:
+    """Parquet files the records are staged in: ~2M records per file,
+    counted by the same rule that sizes the synth corpus."""
+    return max(1, records_for_sf(sf_dir) // 2_000_000)
 
 
 def kdc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,13 +678,7 @@ def q_users_few_services(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'identify users who only use a small number of services'
     (README.md:12): distinct TGS services per user ≤ 3. At 100 TB use the
     approx variant (approx_count_distinct) — exact kept here for checking."""
-    r = kdc_records(spark, sf_dir)
-    return (
-        r.filter(F.col("valid") & F.col("success") & (F.col("req_type") == "TGS"))
-        .groupBy("client")
-        .agg(F.countDistinct("service").alias("n_svc"))
-        .filter(F.col("n_svc") <= 3)
-    )
+    return _few_services(spark, sf_dir, F.countDistinct("service"))
 
 
 @query("users_few_services_approx")
@@ -690,13 +688,21 @@ def q_users_few_services_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct — one partial-aggregable pass, no per-user distinct-set
     shuffle expansion. Rows-only (sketch estimates are engine-internal);
     agreement vs the exact variant is pinned by pytest."""
+    return _few_services(
+        spark, sf_dir, F.approx_count_distinct("service", 0.05)
+    )
+
+
+def _few_services(spark: SparkSession, sf_dir: str, n_svc: Column) -> DataFrame:
+    """Successful TGS clients whose ``n_svc`` (a distinct-service count,
+    exact or sketched) is at most 3."""
     r = kdc_records(spark, sf_dir)
     return (
         r.filter(
             F.col("valid") & F.col("success") & (F.col("req_type") == "TGS")
         )
         .groupBy("client")
-        .agg(F.approx_count_distinct("service", 0.05).alias("n_svc"))
+        .agg(n_svc.alias("n_svc"))
         .filter(F.col("n_svc") <= 3)
     )
 

@@ -2292,7 +2292,11 @@ def sim_search_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade that makes LSH memory-deployable. Hash-verified like its
     single-probe sibling: seeded literal planes, XOR probe expansion
     reproduced in the DuckDB twin
-    (operators/similarity.py:topk_cosine_lsh_multiprobe)."""
-    return similarity.topk_cosine_lsh_multiprobe(
-        load_table(spark, sf_dir, "embeddings"), n_queries=5, k=10
+    (operators/similarity.py:topk_cosine_lsh)."""
+    return similarity.topk_cosine_lsh(
+        load_table(spark, sf_dir, "embeddings"),
+        n_queries=5,
+        k=10,
+        n_tables=2,
+        multiprobe=True,
     )

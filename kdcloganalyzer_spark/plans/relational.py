@@ -4967,22 +4967,81 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle+sort on (user_id, ts) shared by the window; per-
     row state is the distinct set (≤ |event types|). An unbounded
-    domain (distinct URLS seen) would swap the exact set for a per-row
-    HLL merge — the users_few_services_approx pattern. The ts tie-break
-    (event_id) makes the running count deterministic under equal
-    timestamps on both engines."""
+    domain (distinct URLS seen) swaps the exact set for a running HLL
+    sketch — the ``_hll`` form. The ts tie-break (event_id) makes the
+    running count deterministic under equal timestamps on both
+    engines."""
+    return _running_distinct_types(spark, sf_dir, hll=False)
+
+
+@query(
+    "window_running_distinct_hll",
+    oracle="""
+    SELECT e.event_id, e.user_id,
+           CAST((SELECT count(DISTINCT e2.event_type) FROM events e2
+                 WHERE e2.user_id = e.user_id
+                   AND (e2.ts < e.ts OR (e2.ts = e.ts
+                        AND e2.event_id <= e.event_id))) AS INT)
+             AS n_types_seen,
+           TRUE AS hll_in_envelope
+    FROM events e
+    WHERE e.user_id < 30
+    """,
+)
+def window_running_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RUNNING COUNT-DISTINCT, HLL-SKETCH FORM — the exact form keeps
+    the per-key distinct SET as window state, fine while the domain is
+    small and quadratic memory when it isn't (distinct URLs per user).
+    This form keeps a Datasketches HLL as the running-frame state
+    instead: ``hll_sketch_agg(...).over(running frame)`` — constant
+    ~16 KB state per row at lgK=14 regardless of domain size, and the
+    expanding frame needs only the sketch's update() (no retract),
+    which is exactly what Spark's window AggregateProcessor supports.
+    Both the exact collect_set and the HLL sketch share ONE window
+    spec, so the plan has a single sort+Window node — zero extra
+    shuffles.
+
+    Output = the exact twin's columns + ``hll_in_envelope``: every
+    per-row estimate within max(2, 2%) of the exact running count; the
+    oracle asserts the literal TRUE. At the events table's type domain
+    the sketch is in exact (coupon) mode, so the estimate is exactly
+    the count — the envelope is the regression tripwire."""
+    return _running_distinct_types(spark, sf_dir, hll=True)
+
+
+def _running_distinct_types(
+    spark: SparkSession, sf_dir: str, hll: bool
+) -> DataFrame:
+    """Running distinct event types per user (users < 30) from a
+    collect_set window; with ``hll`` an lgK=14 HLL over the same frame
+    is checked against it in ``hll_in_envelope``."""
     ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 30)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return ev.select(
+    cols = [
         "event_id",
         "user_id",
         F.size(F.collect_set("event_type").over(w))
         .cast("int")
         .alias("n_types_seen"),
+    ]
+    if not hll:
+        return ev.select(*cols)
+    est = F.hll_sketch_estimate(
+        F.hll_sketch_agg("event_type", F.lit(14)).over(w)
+    )
+    df = ev.select(*cols, est.alias("_est"))
+    in_env = F.abs(
+        F.col("_est").cast("double") - F.col("n_types_seen")
+    ) <= F.greatest(F.lit(2.0), 0.02 * F.col("n_types_seen"))
+    return df.select(
+        "event_id",
+        "user_id",
+        "n_types_seen",
+        in_env.alias("hll_in_envelope"),
     )
 
 
@@ -6068,6 +6127,129 @@ def agg_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# Drawdown curve (running-peak shortfall of monthly revenue)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "window_drawdown",
+    oracle="""
+    WITH d AS (
+      SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS period,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  AS BIGINT) AS rev_cents
+      FROM orders GROUP BY 1
+    ),
+    p AS (
+      SELECT period, rev_cents,
+             max(rev_cents) OVER (ORDER BY period
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS peak_cents
+      FROM d
+    )
+    SELECT period, rev_cents, CAST(peak_cents AS BIGINT) AS peak_cents,
+           CAST(peak_cents - rev_cents AS BIGINT) AS drawdown_cents,
+           CAST((peak_cents - rev_cents) * 1000000 // peak_cents
+                AS BIGINT) AS drawdown_micro
+    FROM p
+    """,
+)
+def window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DRAWDOWN CURVE — the running-peak shortfall (finance's max-
+    drawdown generalized to any KPI series): per month, revenue, the
+    best month SO FAR, and how far below that peak the current month
+    sits, absolute cents and scaled-integer relative micro. The
+    max-drawdown row is just the curve's argmax — emitting the whole
+    curve keeps the operator composable (alerting reads the last row,
+    reporting plots the series). All exact integers; the relative
+    drawdown is one positive//positive scaled div.
+
+    Scale: the corpus collapses to one row per month in a single
+    partial-agg'd shuffle; the running-max window runs on the
+    calendar-bounded summary (a ~80-row single partition — acceptable
+    because it IS the final report; the per-series form (``_series``)
+    adds partitionBy and parallelizes)."""
+    return _drawdown(spark, sf_dir, per_priority=False)
+
+
+@query(
+    "window_drawdown_series",
+    oracle="""
+    WITH d AS (
+      SELECT o_orderpriority AS series,
+             CAST(date_trunc('month', o_orderdate) AS DATE) AS period,
+             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                  AS BIGINT) AS rev_cents
+      FROM orders GROUP BY 1, 2
+    ),
+    p AS (
+      SELECT series, period, rev_cents,
+             max(rev_cents) OVER (PARTITION BY series ORDER BY period
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS peak_cents
+      FROM d
+    )
+    SELECT series, period, rev_cents,
+           CAST(peak_cents AS BIGINT) AS peak_cents,
+           CAST(peak_cents - rev_cents AS BIGINT) AS drawdown_cents,
+           CAST((peak_cents - rev_cents) * 1000000 // peak_cents
+                AS BIGINT) AS drawdown_micro
+    FROM p
+    """,
+)
+def window_drawdown_series(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """PER-SERIES DRAWDOWN CURVES — one running-peak shortfall curve PER
+    ORDER PRIORITY, monthly revenue in exact cents, relative drawdown as
+    a scaled-integer micro ratio. The running-max window is keyed by
+    series, so the per-series sorts are independent tasks — the global
+    form's single-partition window becomes an embarrassingly-parallel
+    keyed window with the same frame. peak_cents ≥ rev_cents > 0 per
+    construction, so the denominator needs no guard."""
+    return _drawdown(spark, sf_dir, per_priority=True)
+
+
+def _drawdown(spark: SparkSession, sf_dir: str, per_priority: bool) -> DataFrame:
+    """Monthly revenue running-peak drawdown: one global series, or one
+    ``series`` per order priority. The micro ratio is DECIMAL(38,0)-
+    widened (period revenue cents ~8e11 at sf3; ×1e6 crosses BIGINT by
+    ~sf35); the per-series form also divides by the DECIMAL peak."""
+    o = load_table(spark, sf_dir, "orders")
+    keys = ["series"] if per_priority else []
+    series = [F.col("o_orderpriority").alias("series")] if per_priority else []
+    d = o.groupBy(
+        *series,
+        F.date_trunc("month", "o_orderdate").cast("date").alias("period"),
+    ).agg(F.sum(_cents("o_totalprice")).cast("bigint").alias("rev_cents"))
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy("period")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    p = d.select(
+        *keys,
+        "period",
+        "rev_cents",
+        F.max("rev_cents").over(w).cast("bigint").alias("peak_cents"),
+    )
+    peak = "CAST(peak_cents AS DECIMAL(38,0))" if per_priority else "peak_cents"
+    return p.select(
+        *keys,
+        "period",
+        "rev_cents",
+        "peak_cents",
+        (F.col("peak_cents") - F.col("rev_cents"))
+        .cast("bigint")
+        .alias("drawdown_cents"),
+        F.expr(
+            "CAST(CAST(peak_cents - rev_cents AS DECIMAL(38,0))"
+            f" * 1000000 div {peak} AS BIGINT)"
+        ).alias("drawdown_micro"),
+    )
+
+
 @query(
     "agg_weighted_median",
     oracle="""
@@ -6108,18 +6290,10 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE shuffle on the group key serves the cumulative window
     and the total; the threshold filter + min collapse the group
     without materializing ranks. At extreme per-group cardinality the
-    sort is the cost — the sketch path is a weighted KLL/t-digest
-    (each value inserted with multiplicity), the same exact-to-sketch
-    ladder as the unweighted percentile family."""
-    x = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias(
-            "cents"
-        ),
-        F.col("l_quantity").cast("bigint").alias("w"),
-        "l_orderkey",
-        "l_linenumber",
-    )
+    sort is the cost — the ``_sketch`` form replaces it with a weighted
+    log-bucket sketch, the same exact-to-sketch ladder as the
+    unweighted percentile family."""
+    x = _weighted_prices(spark, sf_dir)
     wcum = (
         Window.partitionBy("flag")
         .orderBy("cents", "l_orderkey", "l_linenumber")
@@ -6139,4 +6313,197 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("cents").alias("weighted_median_cents"),
             F.max("total").cast("bigint").alias("total_weight"),
         )
+    )
+
+
+@query(
+    "agg_weighted_median_sketch",
+    oracle="""
+    WITH x AS (
+      SELECT l_returnflag AS flag,
+             CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+             CAST(l_quantity AS BIGINT) AS w,
+             l_orderkey, l_linenumber
+      FROM lineitem
+    ),
+    cum AS (
+      SELECT flag, cents, w,
+             sum(w) OVER (PARTITION BY flag
+                          ORDER BY cents, l_orderkey, l_linenumber
+                          ROWS UNBOUNDED PRECEDING) AS cw,
+             sum(w) OVER (PARTITION BY flag) AS total
+      FROM x
+    )
+    SELECT flag,
+           CAST(min(cents) AS BIGINT) AS weighted_median_cents,
+           CAST(max(total) AS BIGINT) AS total_weight,
+           TRUE AS sketch_in_envelope
+    FROM cum
+    WHERE 2 * cw >= total
+    GROUP BY flag
+    """,
+)
+def agg_weighted_median_sketch(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """WEIGHTED MEDIAN, SKETCH FORM — a natively WEIGHTED mergeable
+    quantile sketch: log-bucket (DDSketch-style) cells
+    ``floor(ln(cents) / ln(1.01))`` with ``sum(w)`` per cell, so the
+    quantity weight enters the sketch as an ADDEND, never as row
+    multiplicity (expanding each row w times is the anti-pattern: it
+    multiplies the rows an ObjectHashAggregate must see). One
+    whole-stage-codegen hash aggregate over the scan; cell count is
+    bounded by the VALUE RANGE (≤ ~1.4k cells per flag for any cents
+    domain under 10^6, independent of row count), the per-cell sums are
+    map-side combinable and the sketch merges by cell-wise addition —
+    the 100 TB shape. The sketch's q=0.5 point is the upper bound of
+    the first cell where cumulative weight crosses half the total
+    (cumulated over the ≤1.4k collected cells driver-side — a bounded
+    control table).
+
+    The reported median/total are EXACT (the hash gate re-verifies
+    them), computed TWO-PHASE from the same cells: the cell sums locate
+    the crossing cell and its exact below-weight, so the exact pass is
+    a codegen filter to the ~2 relevant cells per flag (~1/500 of the
+    rows) plus a window over that narrow set with the below-weight as a
+    literal offset — no per-flag global sort. The sketch feeds
+    ``sketch_in_envelope`` — TRUE iff the sketch point's
+    cumulative-weight position lies in [45%, 55%] of the group's total
+    weight (20*cw_le >= 9*total and 20*cw_lt <= 11*total,
+    integer-exact; gamma=1.01 gives ≤1% value error, comfortably inside
+    the band); its rank-counts fuse into the narrow pass as conditional
+    sums (cells <= crossing carry cents < b by construction, cells >
+    crossing+1 carry cents > b, so only crossing+1 rows are compared to
+    b row-level). Zero full-data shuffles or sorts remain: one
+    mergeable cell aggregate + one narrow refinement."""
+    import math
+
+    x = _weighted_prices(spark, sf_dir)
+    gamma = 1.01
+    lg = math.log(gamma)
+    xc = x.withColumn(
+        "cell",
+        F.floor(F.log(F.col("cents").cast("double")) / F.lit(lg)).cast(
+            "bigint"
+        ),
+    )
+    cells = (
+        xc.groupBy("flag", "cell").agg(F.sum("w").alias("cw")).collect()
+    )
+    by_flag: dict[str, list[tuple[int, int]]] = {}
+    for r in cells:
+        by_flag.setdefault(r["flag"], []).append((r["cell"], r["cw"]))
+    # Per-flag control scalars from the exact cell sums: the crossing
+    # cell (where cumulative weight first reaches half the total), the
+    # exact weight below it, the sketch point b (crossing cell's upper
+    # bound), and the exact weight at-or-below the crossing cell (the
+    # envelope base — every row in cells <= crossing has cents < b,
+    # every row in cells > crossing+1 has cents > b, so only the
+    # crossing+1 cell needs row-level inspection against b).
+    ctl: dict[str, tuple[int, int, int, int, int]] = {}
+    for fl, cs in by_flag.items():
+        cs.sort()
+        total = sum(cw for _, cw in cs)
+        acc = 0
+        for cell, cw in cs:
+            if 2 * (acc + cw) >= total:
+                b = int(math.ceil(gamma ** (cell + 1)))
+                ctl[fl] = (cell, acc, total, b, acc + cw)
+                break
+            acc += cw
+
+    def _case(idx: int, dtype: str = "bigint"):
+        c = F.lit(None).cast(dtype)
+        for fl, vals in ctl.items():
+            c = F.when(F.col("flag") == F.lit(fl), F.lit(vals[idx])).otherwise(
+                c
+            )
+        return c
+
+    cross_case, below_case, total_case, b_case, le_below_case = (
+        _case(0),
+        _case(1),
+        _case(2),
+        _case(3),
+        _case(4),
+    )
+    narrow = xc.where(
+        (F.col("cell") == cross_case) | (F.col("cell") == cross_case + 1)
+    )
+    wcum = (
+        Window.partitionBy("flag")
+        .orderBy("cents", "l_orderkey", "l_linenumber")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = narrow.select(
+        "flag",
+        "cents",
+        "cell",
+        "w",
+        cross_case.alias("cross"),
+        total_case.alias("total"),
+        b_case.alias("b"),
+        le_below_case.alias("le_below"),
+        (
+            below_case
+            + F.sum(F.when(F.col("cell") == cross_case, F.col("w")).otherwise(0)).over(
+                wcum
+            )
+        ).alias("cw"),
+    )
+    return cum.groupBy("flag").agg(
+        F.min(
+            F.when(
+                (F.col("cell") == F.col("cross"))
+                & (2 * F.col("cw") >= F.col("total")),
+                F.col("cents"),
+            )
+        )
+        .cast("bigint")
+        .alias("weighted_median_cents"),
+        F.max("total").cast("bigint").alias("total_weight"),
+        (
+            (
+                20
+                * (
+                    F.max("le_below")
+                    + F.sum(
+                        F.when(
+                            (F.col("cell") == F.col("cross") + 1)
+                            & (F.col("cents") <= F.col("b")),
+                            F.col("w"),
+                        ).otherwise(0)
+                    )
+                )
+                >= 9 * F.max("total")
+            )
+            & (
+                20
+                * (
+                    F.max("le_below")
+                    + F.sum(
+                        F.when(
+                            (F.col("cell") == F.col("cross") + 1)
+                            & (F.col("cents") < F.col("b")),
+                            F.col("w"),
+                        ).otherwise(0)
+                    )
+                )
+                <= 11 * F.max("total")
+            )
+        ).alias("sketch_in_envelope"),
+    )
+
+
+def _weighted_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(flag, cents, w, l_orderkey, l_linenumber): each line's exact
+    price cents weighted by its quantity, with the total-order key."""
+    return load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_returnflag").alias("flag"),
+        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias(
+            "cents"
+        ),
+        F.col("l_quantity").cast("bigint").alias("w"),
+        "l_orderkey",
+        "l_linenumber",
     )

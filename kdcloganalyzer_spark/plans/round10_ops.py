@@ -1,12 +1,6 @@
-"""Round-10 operators: the 100 TB swap forms the r9 curation samplers
-promised (VERDICT r9 item 5), plus later r10 additions.
-
-Both swap forms produce EXACTLY the rows of their window-form siblings
-(`pipeline_quota_sampler`, `pipeline_interleave_sources`) and therefore
-share their DuckDB oracles verbatim — the same exact-twin pattern as
-events_rfm_segmentation_approx vs its exact form: the oracle certifies
-the swap changed the PLAN, not the answer.
-"""
+"""Sketch, sampling, embedding-evaluation, join and scan operators (KMV
+distinct set operations, class-balanced sampling, Matryoshka/kNN
+embedding evals, as-of and bloom-prescreened joins, and more)."""
 
 from __future__ import annotations
 
@@ -14,167 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
-
-# Shared oracle texts (identical rows => identical SQL twin).
-QUOTA_ORACLE = """
-    SELECT doc_id, source, CAST(rk AS INT) AS sample_rank FROM (
-      SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-      FROM documents
-    ) WHERE rk <= 120
-"""
-
-INTERLEAVE_ORACLE = """
-    WITH ranked AS (
-      SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS rk,
-             dense_rank() OVER (ORDER BY source) - 1 AS src_idx,
-             count(DISTINCT source) OVER () AS n_src
-      FROM documents
-    )
-    SELECT doc_id, source,
-           CAST(rk * n_src + src_idx AS BIGINT) AS mix_pos
-    FROM ranked
-"""
-
-
-@query("pipeline_quota_sampler_twophase", oracle=QUOTA_ORACLE)
-def pipeline_quota_sampler_twophase(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-source quota sampling via the TWO-PHASE top-K — the 100 TB
-    form `pipeline_quota_sampler`'s docstring promises. The window form
-    shuffles the FULL corpus onto |sources| reducers and sorts each
-    source's entire population; with few, huge sources that is the
-    canonical skew bottleneck. Here phase 1 runs INSIDE each input
-    split with zero movement: an Arrow-batched ``mapInPandas`` keeps
-    only each batch's per-source 120 smallest (md5, doc_id) keys, so at
-    most quota × batches × sources candidate rows ever leave the scan —
-    at 100 TB that is the difference between shuffling the corpus and
-    shuffling kilobytes per task. Phase 2 ranks the surviving
-    candidates with the same total order and keeps the true top-120;
-    because every phase-1 survivor set contains its split's true
-    per-source top-120, the merge is exact (mergeable bottom-k, the
-    law test_consistent_topk_is_mergeable_bottom_k pins for the md5
-    rank family).
-
-    The md5 sort key is computed JVM-side (codegen) BEFORE the Python
-    boundary; pandas only nsmallest-selects. Output == the window form
-    row-for-row, so this shares its oracle verbatim."""
-    from kdcloganalyzer_spark.operators.dedup import spread
-    from kdcloganalyzer_spark.sources.tables import load_table
-    from pyspark.sql.window import Window
-
-    quota = 120
-    docs = spread(
-        load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    ).withColumn("k", F.md5(F.col("doc_id").cast("string")))
-
-    def local_topk(batches):  # closure: executors lack repo on sys.path
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield (
-                pdf.sort_values(["k", "doc_id"])
-                .groupby("source", sort=False)
-                .head(120)
-            )
-
-    cand = docs.mapInPandas(
-        local_topk, "doc_id bigint, source string, k string"
-    )
-    w = Window.partitionBy("source").orderBy("k", "doc_id")
-    return (
-        cand.withColumn("sample_rank", F.row_number().over(w))
-        .where(F.col("sample_rank") <= quota)
-        .select(
-            "doc_id", "source", F.col("sample_rank").cast("int").alias(
-                "sample_rank"
-            )
-        )
-    )
-
-
-@query("pipeline_interleave_sources_ranged", oracle=INTERLEAVE_ORACLE)
-def pipeline_interleave_sources_ranged(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Round-robin source interleave with the RANGE-SHARDED writer — the
-    100 TB form `pipeline_interleave_sources`' docstring promises. The
-    mix position is the same pure key function (rk × n_sources +
-    source_index), but instead of leaving a logically-ordered frame for
-    a downstream global sort, the epoch is MATERIALIZED as range shards:
-    ``repartitionByRange(mix_pos)`` samples split points and gives every
-    shard a disjoint, ordered slice of the epoch, each sorted within
-    itself — a trainer streams shard 0..N-1 and sees the exact
-    interleave with NO single-partition sort anywhere (the same
-    bucket-writer story as pipeline_global_shuffle, with a balance
-    guarantee instead of a random one). The read-back proves the
-    shards reassemble the identical epoch: output == the window form
-    row-for-row, same oracle verbatim.
-
-    Scale: one shuffle on source for the rank window, one range
-    exchange for the writer (sampled split points, so shards stay
-    balanced even though early mix positions are denser); shard count
-    scales with the cluster, not the corpus."""
-    import tempfile
-
-    from kdcloganalyzer_spark.sources.tables import load_table
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    # r15: ONE bounded collect supplies both control values (source
-    # count and dense index = position in sort order) — same rewrite
-    # as pipeline_interleave_sources; drops a count() action, two
-    # extra documents scans and the broadcast join.
-    sources = sorted(
-        row[0] for row in docs.select("source").distinct().collect()
-    )
-    # same bounded-domain guards as pipeline_interleave_sources
-    # (ADVICE r15): fail loud on NULL sources, and keep the literal map
-    # under the ~64-entry codegen-recompile bound.
-    assert all(s is not None for s in sources), (
-        "pipeline_interleave_sources_ranged: NULL source value"
-    )
-    assert len(sources) <= 64, (
-        f"pipeline_interleave_sources_ranged: {len(sources)} sources "
-        "exceeds the literal-map codegen bound"
-    )
-    n_src = len(sources)
-    idx_map = F.create_map(
-        *[
-            lit
-            for i, s in enumerate(sources)
-            for lit in (F.lit(s), F.lit(i))
-        ]
-    )
-    epoch = (
-        docs.withColumn("rk", F.row_number().over(w) - 1)
-        .select(
-            "doc_id",
-            "source",
-            (
-                F.col("rk") * n_src
-                + F.element_at(idx_map, F.col("source"))
-            )
-            .cast("long")
-            .alias("mix_pos"),
-        )
-    )
-    out = tempfile.mkdtemp(prefix="interleave_shards_")
-    (
-        epoch.repartitionByRange(8, "mix_pos")
-        .sortWithinPartitions("mix_pos")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return spark.read.parquet(out).select("doc_id", "source", "mix_pos")
-
 
 # ---------------------------------------------------------------------------
 # KMV (bottom-k minimum values) distinct sketch with set operations

@@ -1421,6 +1421,15 @@ def analytics_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RAKE_STOP = ("the", "and", "for", "with", "from", "this", "that", "are", "was")
 
 
+def _stopword_regex(stops: tuple[str, ...]) -> str:
+    """Regex matching any whole space-delimited stopword token; each
+    stopword is escaped, so it matches only itself."""
+    import re
+
+    alt = "|".join(re.escape(w) for w in stops)
+    return f"(?<= )(?:{alt})(?= )"
+
+
 @query(
     "text_keyword_rake",
     oracle=f"""
@@ -1507,8 +1516,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace(F.lower(F.col("text")), "[^a-z]+", " "),
         F.lit(" "),
     )
-    stop_alt = "|".join(_RAKE_STOP)
-    seg = F.regexp_replace(norm, f"(?<= )(?:{stop_alt})(?= )", "|")
+    seg = F.regexp_replace(norm, _stopword_regex(_RAKE_STOP), "|")
     phrases = F.filter(
         F.transform(F.split(seg, "[|]"), lambda s: F.trim(s)),
         lambda s: s != "",
@@ -2096,7 +2104,7 @@ def _lp3_labels(spark: SparkSession, sf_dir: str, sym: DataFrame):
     reuse one materialization instead of re-running the vote rounds —
     the amortized-index contract applied to the community partition."""
     from kdcloganalyzer_spark import appcache
-    from kdcloganalyzer_spark.plans.round8_ops import (
+    from kdcloganalyzer_spark.plans.analytics import (
         lp_initial_labels,
         lp_vote_round,
     )
@@ -2112,7 +2120,7 @@ def _lp3_labels(spark: SparkSession, sf_dir: str, sym: DataFrame):
 
 
 def _modularity_oracle() -> str:
-    from kdcloganalyzer_spark.plans.round8_ops import (
+    from kdcloganalyzer_spark.plans.analytics import (
         _LP_EDGES_SQL,
         _lp_round_sql,
     )

@@ -1,5 +1,5 @@
-"""Round-12 additions: the two named-but-unregistered 100 TB swap twins
-(VERDICT r11 item 2) and further coverage widening.
+"""Coverage-widening operators: URL functions, multimodal byte layouts,
+retention ledgers, sampling and curation reports, and more.
 
 Like every plans module: each operator is a ``@query`` registration with
 a DuckDB oracle twin; money/measure aggregates accumulate EXACT INTEGER
@@ -13,180 +13,6 @@ from pyspark.sql import functions as F
 from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans.registry import query
 from kdcloganalyzer_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# HLL swap twins (VERDICT r11 item 2) — the sketch forms the exact ids'
-# docstrings name, registered as runnable queries. Oracle pattern follows
-# events_audience_overlap_hll (analytics.py): the registered output carries
-# the EXACT values (identical to the exact twin's green oracle) plus an
-# ``hll_in_envelope`` flag Spark computes from the live sketch estimates;
-# the oracle asserts the literal TRUE, so a sketch regression flips the
-# flag and fails the driver hash — the sketch path itself is under test.
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "window_running_distinct_hll",
-    oracle="""
-    SELECT e.event_id, e.user_id,
-           CAST((SELECT count(DISTINCT e2.event_type) FROM events e2
-                 WHERE e2.user_id = e.user_id
-                   AND (e2.ts < e.ts OR (e2.ts = e.ts
-                        AND e2.event_id <= e.event_id))) AS INT)
-             AS n_types_seen,
-           TRUE AS hll_in_envelope
-    FROM events e
-    WHERE e.user_id < 30
-    """,
-)
-def window_running_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RUNNING COUNT-DISTINCT, HLL-SKETCH FORM — the unbounded-domain
-    swap ``window_running_distinct``'s docstring names (relational.py),
-    registered as a runnable query (VERDICT r11 item 2). The exact form
-    keeps the per-key distinct SET as window state — fine while the
-    domain is small, quadratic memory when it isn't (distinct URLs per
-    user). The swap keeps a Datasketches HLL as the running-frame state
-    instead: ``hll_sketch_agg(...).over(running frame)`` — constant
-    ~16 KB state per row at lgK=14 regardless of domain size, and the
-    expanding frame needs only the sketch's update() (no retract), which
-    is exactly what Spark's window AggregateProcessor supports.
-
-    Both the exact collect_set and the HLL sketch share ONE window spec,
-    so the plan has a single sort+Window node (verified: one Window
-    operator computes both _we0/_we1) — the swap adds zero shuffles.
-
-    Output = the exact twin's columns + ``hll_in_envelope``: every
-    per-row estimate within max(2, 2%) of the exact running count (the
-    lgK=14 envelope tests/test_round7_ops.py pins for the sketch
-    family); the oracle asserts the literal TRUE. At the events table's
-    type domain the sketch is in exact (coupon) mode, so the estimate is
-    exactly the count — the envelope is the regression tripwire."""
-    ev = load_table(spark, sf_dir, "events").where(F.col("user_id") < 30)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    est = F.hll_sketch_estimate(
-        F.hll_sketch_agg("event_type", F.lit(14)).over(w)
-    )
-    df = ev.select(
-        "event_id",
-        "user_id",
-        F.size(F.collect_set("event_type").over(w))
-        .cast("int")
-        .alias("n_types_seen"),
-        est.alias("_est"),
-    )
-    in_env = F.abs(
-        F.col("_est").cast("double") - F.col("n_types_seen")
-    ) <= F.greatest(F.lit(2.0), 0.02 * F.col("n_types_seen"))
-    return df.select(
-        "event_id",
-        "user_id",
-        "n_types_seen",
-        in_env.alias("hll_in_envelope"),
-    )
-
-
-@query(
-    "events_dau_mau_stickiness_hll",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(ts AS DATE) AS day,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS dau
-      FROM events GROUP BY 1
-    ),
-    m AS (
-      SELECT CAST(date_trunc('month', day) AS DATE) AS month,
-             CAST(sum(dau) AS BIGINT) AS sum_dau,
-             CAST(count(*) AS BIGINT) AS n_days
-      FROM d GROUP BY 1
-    ),
-    mu AS (
-      SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
-             CAST(count(DISTINCT user_id) AS BIGINT) AS mau
-      FROM events GROUP BY 1
-    )
-    SELECT m.month, mu.mau, m.sum_dau, m.n_days,
-           m.sum_dau * 1000000 // (m.n_days * mu.mau)
-             AS stickiness_micro,
-           TRUE AS hll_in_envelope
-    FROM m JOIN mu ON m.month = mu.month
-    """,
-)
-def events_dau_mau_stickiness_hll(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """DAU/MAU STICKINESS, HLL-SKETCH FORM — the per-day-distinct swap
-    ``events_dau_mau_stickiness``'s docstring names (analytics.py),
-    registered as a runnable query (VERDICT r11 item 2). At true 100 TB
-    the per-day exact COUNT(DISTINCT user_id) is the heavy node (a
-    user-keyed distinct shuffle per day); the mergeable-summary form
-    builds ONE Datasketches HLL per day in a single partial-agg'd pass
-    (no distinct materialization ever shuffles raw user ids — sketches
-    merge map-side), then rolls days → months two ways: Σ estimate(day)
-    for the DAU numerator and estimate(hll_union_agg(day sketches)) for
-    the MAU denominator — the union over sketches is exact-over-sketches,
-    so the month sketch equals a month-grain sketch without rescanning.
-
-    Output = the exact twin's columns + ``hll_in_envelope``: the per-month
-    Σ-of-day-estimates within max(2·n_days, 2% of Σdau) — per-day errors
-    are independent, so the summed RELATIVE error shrinks ~1/√n_days and
-    2% is a ≫3σ bound — and the union-sketch MAU within max(3, 2.5%)
-    (single sketch at lgK=14, RSE ≈0.81%, so 2.5% ≈ 3σ). The oracle
-    asserts the literal TRUE; the reported metric stays the exact
-    integer-micro stickiness, so the hash also re-verifies the metric."""
-    ev = load_table(spark, sf_dir, "events")
-    # r15: one (user, day) distinct collapse feeds BOTH the day-grain
-    # branch and the exact-MAU envelope branch (HLL updates are
-    # idempotent — sketching the deduped table builds the identical
-    # sketch), instead of two corpus scans with separate distincts.
-    ud = (
-        ev.select(F.to_date("ts").alias("day"), "user_id")
-        .distinct()
-        .localCheckpoint()
-    )
-    day = ud.groupBy("day").agg(
-        F.hll_sketch_agg(F.col("user_id"), F.lit(14)).alias("sk"),
-        F.count("*").alias("dau"),
-    )
-    m = day.groupBy(
-        F.date_trunc("month", "day").cast("date").alias("month")
-    ).agg(
-        F.sum("dau").cast("bigint").alias("sum_dau"),
-        F.count("*").alias("n_days"),
-        F.sum(F.hll_sketch_estimate("sk")).alias("_sum_dau_est"),
-        F.hll_sketch_estimate(F.hll_union_agg("sk", F.lit(False))).alias(
-            "_mau_est"
-        ),
-    )
-    mu = (
-        ud.select(
-            F.date_trunc("month", "day").cast("date").alias("month"),
-            "user_id",
-        )
-        .distinct()
-        .groupBy("month")
-        .agg(F.count("*").alias("mau"))
-    )
-    in_env = (
-        F.abs(F.col("_sum_dau_est").cast("double") - F.col("sum_dau"))
-        <= F.greatest(2.0 * F.col("n_days"), 0.02 * F.col("sum_dau"))
-    ) & (
-        F.abs(F.col("_mau_est").cast("double") - F.col("mau"))
-        <= F.greatest(F.lit(3.0), 0.025 * F.col("mau"))
-    )
-    return m.join(mu, "month").select(
-        "month",
-        "mau",
-        "sum_dau",
-        "n_days",
-        F.expr("sum_dau * 1000000 div (n_days * mau)").alias(
-            "stickiness_micro"
-        ),
-        in_env.alias("hll_in_envelope"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -262,75 +88,6 @@ def fn_url_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.parse_url("url", F.lit("REF")).alias("ref"),
         qp.alias("q_raw"),
         F.url_decode(qp).alias("q_decoded"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Per-user behavioral entropy (micro-nat integer idiom)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "events_user_entropy",
-    oracle="""
-    WITH c AS (
-      SELECT user_id, event_type, count(*) AS c
-      FROM events GROUP BY 1, 2
-    ),
-    d AS (
-      SELECT user_id, c,
-             sum(c) OVER (PARTITION BY user_id) AS n
-      FROM c
-    ),
-    l AS (
-      SELECT user_id, c, n,
-             CAST(round(ln(CAST(c AS DOUBLE) / n) * 1000000) AS BIGINT)
-               AS lnm
-      FROM d
-    )
-    SELECT user_id,
-           CAST(sum(c) AS BIGINT) AS n_events,
-           CAST(count(*) AS BIGINT) AS n_types,
-           CAST((-sum(c * lnm)) // sum(c) AS BIGINT) AS h_micro
-    FROM l GROUP BY user_id
-    """,
-)
-def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-USER BEHAVIORAL ENTROPY — Shannon entropy of each user's
-    event-type distribution in integer MICRO-NATS (H = −Σ p·ln p): the
-    behavioral-diversity feature that separates single-action bots
-    (H=0) from organic multi-surface users, and the same measure
-    curation pipelines run over source/format distributions. Exactness
-    follows quality_bigram_lm's idiom: each per-term ln(c/n) is rounded
-    ONCE to integer micro-nats (the single correctly-rounded division
-    feeding ln makes the input identical across engines), then
-    c-weighted integer sums and one integer div — no double ever sums,
-    so the hash is order-free. Both divs are positive//positive, where
-    DuckDB's floor-div and Spark's trunc-div agree.
-
-    Scale: one partial-agg'd (user, type) shuffle collapses the corpus
-    to ≤ |users|·|types| rows; the window and final rollup run on that
-    summary sharing the user partitioning. At unbounded type domains
-    the exact count vector swaps for a CMS/top-k head plus a tail
-    bucket — entropy needs only the histogram, never raw events."""
-    ev = load_table(spark, sf_dir, "events")
-    c = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
-    d = c.withColumn(
-        "n", F.sum("c").over(Window.partitionBy("user_id"))
-    )
-    lnm = F.expr(
-        "CAST(round(ln(CAST(c AS DOUBLE) / n) * 1000000) AS BIGINT)"
-    )
-    return (
-        d.select("user_id", "c", lnm.alias("lnm"))
-        .groupBy("user_id")
-        .agg(
-            F.sum("c").cast("bigint").alias("n_events"),
-            F.count("*").cast("bigint").alias("n_types"),
-            F.expr("CAST((-sum(c * lnm)) div sum(c) AS BIGINT)").alias(
-                "h_micro"
-            ),
-        )
     )
 
 
@@ -1533,79 +1290,6 @@ def pipeline_tokenizer_fertility(
 
 
 # ---------------------------------------------------------------------------
-# Drawdown curve (running-peak shortfall of daily revenue)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "window_drawdown",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS period,
-             CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                  AS BIGINT) AS rev_cents
-      FROM orders GROUP BY 1
-    ),
-    p AS (
-      SELECT period, rev_cents,
-             max(rev_cents) OVER (ORDER BY period
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS peak_cents
-      FROM d
-    )
-    SELECT period, rev_cents, CAST(peak_cents AS BIGINT) AS peak_cents,
-           CAST(peak_cents - rev_cents AS BIGINT) AS drawdown_cents,
-           CAST((peak_cents - rev_cents) * 1000000 // peak_cents
-                AS BIGINT) AS drawdown_micro
-    FROM p
-    """,
-)
-def window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DRAWDOWN CURVE — the running-peak shortfall (finance's max-
-    drawdown generalized to any KPI series): per month, revenue, the
-    best month SO FAR, and how far below that peak the current month
-    sits, absolute cents and scaled-integer relative micro. The
-    max-drawdown row is just the curve's argmax — emitting the whole
-    curve keeps the operator composable (alerting reads the last row,
-    reporting plots the series). All exact integers; the relative
-    drawdown is one positive//positive scaled div.
-
-    Scale: the corpus collapses to one row per month in a single
-    partial-agg'd shuffle; the running-max window runs on the
-    calendar-bounded summary (a ~80-row single partition — acceptable
-    because it IS the final report; per-series drawdowns would add
-    partitionBy and parallelize)."""
-    o = load_table(spark, sf_dir, "orders")
-    from kdcloganalyzer_spark.plans.relational import _cents
-
-    d = o.groupBy(
-        F.date_trunc("month", "o_orderdate").cast("date").alias("period")
-    ).agg(F.sum(_cents("o_totalprice")).cast("bigint").alias("rev_cents"))
-    w = Window.orderBy("period").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    p = d.select(
-        "period",
-        "rev_cents",
-        F.max("rev_cents").over(w).cast("bigint").alias("peak_cents"),
-    )
-    return p.select(
-        "period",
-        "rev_cents",
-        "peak_cents",
-        (F.col("peak_cents") - F.col("rev_cents"))
-        .cast("bigint")
-        .alias("drawdown_cents"),
-        # DECIMAL(38,0) widening (r16 sf3 overflow sweep): period
-        # revenue cents ~8e11 at sf3; ×1e6 crosses BIGINT by ~sf35.
-        F.expr(
-            "CAST(CAST(peak_cents - rev_cents AS DECIMAL(38,0))"
-            " * 1000000 div peak_cents AS BIGINT)"
-        ).alias("drawdown_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # PCM audio energy (multimodal compute: RMS / peak over 16-bit LE frames)
 # ---------------------------------------------------------------------------
 
@@ -1700,82 +1384,6 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_energy,
         "doc_id long, n_samples long, energy_q long, peak_q long,"
         " rms_milli long",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bollinger bands over daily volume (exact integer breach test)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "events_bollinger_bands",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM events GROUP BY 1
-    ),
-    w AS (
-      SELECT day, x,
-             CAST(count(*) OVER win AS BIGINT) AS n,
-             CAST(sum(x) OVER win AS BIGINT) AS s,
-             CAST(sum(x * x) OVER win AS BIGINT) AS q
-      FROM d
-      WINDOW win AS (ORDER BY day
-                     ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-    )
-    SELECT day, x AS n_events, n AS win_n,
-           CAST(s * 1000 // n AS BIGINT) AS mean_milli,
-           CAST(n * q - s * s AS BIGINT) AS var_num,
-           (x * n - s) > 0
-             AND (x * n - s) * (x * n - s) > 4 * (n * q - s * s)
-             AS breach_hi,
-           (x * n - s) < 0
-             AND (x * n - s) * (x * n - s) > 4 * (n * q - s * s)
-             AS breach_lo
-    FROM w
-    """,
-)
-def events_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOLLINGER BANDS over daily event volume — the rolling ±2σ
-    envelope ops dashboards draw, with the breach test in EXACT
-    integers: over a 7-day trailing window with running sums S, Q and
-    count n, |x − μ| > 2σ is cross-multiplied to
-    (x·n − S)² > 4·(n·Q − S²) — no division, no sqrt, no float
-    anywhere (the mean is reported as one scaled div; the variance
-    NUMERATOR n·Q − S² is emitted raw). The sign of (x·n − S) splits
-    hi/lo breaches.
-
-    Scale: the corpus collapses to one row per day in a single
-    partial-agg'd shuffle; the three window aggregates share ONE
-    7-row frame over the calendar summary. Per-series bands add
-    partitionBy to the same window — the shuffle is then keyed, not
-    global."""
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.groupBy(
-        F.date_trunc("day", "ts").alias("day")
-    ).agg(F.count("*").cast("bigint").alias("x"))
-    win = Window.orderBy("day").rowsBetween(-6, Window.currentRow)
-    w = d.select(
-        "day",
-        "x",
-        F.count("*").over(win).cast("bigint").alias("n"),
-        F.sum("x").over(win).cast("bigint").alias("s"),
-        F.sum(F.col("x") * F.col("x")).over(win).cast("bigint").alias("q"),
-    )
-    dev = F.col("x") * F.col("n") - F.col("s")
-    var4 = 4 * (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
-    return w.select(
-        "day",
-        F.col("x").alias("n_events"),
-        F.col("n").alias("win_n"),
-        F.expr("CAST(s * 1000 div n AS BIGINT)").alias("mean_milli"),
-        (F.col("n") * F.col("q") - F.col("s") * F.col("s"))
-        .cast("bigint")
-        .alias("var_num"),
-        ((dev > 0) & (dev * dev > var4)).alias("breach_hi"),
-        ((dev < 0) & (dev * dev > var4)).alias("breach_lo"),
     )
 
 
@@ -3216,107 +2824,6 @@ def scan_csv_multichar_sep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup-rate growth curve (nested md5-prefix subsamples)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "pipeline_dedup_rate_curve",
-    oracle="""
-    WITH g AS (
-      SELECT md5(array_to_string(string_split(text, ' ')[1:8], ' '))
-               AS grp,
-             CAST(('0x' || substr(md5('curve#'
-                    || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 4
-                  AS BIGINT) AS b
-      FROM documents
-    ),
-    c AS (
-      SELECT grp,
-             sum(CASE WHEN b <= 0 THEN 1 ELSE 0 END) AS c0,
-             sum(CASE WHEN b <= 1 THEN 1 ELSE 0 END) AS c1,
-             sum(CASE WHEN b <= 2 THEN 1 ELSE 0 END) AS c2,
-             sum(CASE WHEN b <= 3 THEN 1 ELSE 0 END) AS c3
-      FROM g GROUP BY grp
-    ),
-    t AS (
-      SELECT unnest([0, 1, 2, 3]) AS quartile
-    )
-    SELECT t.quartile,
-           CAST(sum(CASE t.quartile WHEN 0 THEN c0 WHEN 1 THEN c1
-                    WHEN 2 THEN c2 ELSE c3 END) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN (CASE t.quartile WHEN 0 THEN c0
-                    WHEN 1 THEN c1 WHEN 2 THEN c2 ELSE c3 END) > 0
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-           CAST((sum(CASE t.quartile WHEN 0 THEN c0 WHEN 1 THEN c1
-                     WHEN 2 THEN c2 ELSE c3 END)
-                 - sum(CASE WHEN (CASE t.quartile WHEN 0 THEN c0
-                       WHEN 1 THEN c1 WHEN 2 THEN c2 ELSE c3 END) > 0
-                       THEN 1 ELSE 0 END)) * 1000000
-                // sum(CASE t.quartile WHEN 0 THEN c0 WHEN 1 THEN c1
-                       WHEN 2 THEN c2 ELSE c3 END) AS BIGINT)
-             AS dup_rate_micro
-    FROM c CROSS JOIN t
-    GROUP BY t.quartile
-    """,
-)
-def pipeline_dedup_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEDUP-RATE GROWTH CURVE — how duplication scales with corpus
-    size: nested 25/50/75/100% subsamples (deterministic seeded-md5
-    quartile buckets, so each prefix CONTAINS the previous — the only
-    way the curve is monotone-meaningful) each report docs, unique
-    fingerprints, and the dup rate. Real corpora show superlinear
-    duplicate growth (unique content follows Heaps' law), and this
-    curve is what extrapolates dedup savings from a pilot slice to the
-    full crawl before anyone pays for the full run. One fingerprint
-    groupBy computes all four prefixes at once: per-group cumulative
-    bucket counts c0..c3, then four prefix rollups over the group
-    summary — the corpus is scanned ONCE, never per point.
-
-    Scale: the fingerprint collapse is the dedup_exact shuffle; the
-    4× expansion happens on the GROUP summary (4 rows per group,
-    constant), not raw docs; output is 4 rows."""
-    docs = load_table(spark, sf_dir, "documents")
-    g = docs.select(
-        F.md5(
-            F.array_join(F.slice(F.split("text", " "), 1, 8), " ")
-        ).alias("grp"),
-        F.expr(
-            "CAST(conv(substring(md5(concat('curve#',"
-            " CAST(doc_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 4"
-        ).alias("b"),
-    )
-    c = g.groupBy("grp").agg(
-        *[
-            F.sum(F.when(F.col("b") <= q, 1).otherwise(0)).alias(f"c{q}")
-            for q in range(4)
-        ]
-    )
-    t = c.select(
-        "c0", "c1", "c2", "c3",
-        F.explode(F.array(*[F.lit(q) for q in range(4)])).alias(
-            "quartile"
-        ),
-    ).select(
-        "quartile",
-        F.expr(
-            "CASE quartile WHEN 0 THEN c0 WHEN 1 THEN c1"
-            " WHEN 2 THEN c2 ELSE c3 END"
-        ).alias("cq"),
-    )
-    return t.groupBy("quartile").agg(
-        F.sum("cq").cast("bigint").alias("n_docs"),
-        F.sum(F.when(F.col("cq") > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_unique"),
-        F.expr(
-            "CAST((sum(cq) - sum(CASE WHEN cq > 0 THEN 1 ELSE 0 END))"
-            " * 1000000 div sum(cq) AS BIGINT)"
-        ).alias("dup_rate_micro"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # ZIP local-file-header build + probe (variable-offset byte layout)
 # ---------------------------------------------------------------------------
 
@@ -3414,80 +2921,6 @@ def multimodal_zip_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             " 'UTF-8')"
         ).alias("member_name"),
         (30 + name_len).cast("bigint").alias("data_offset"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Local peak detection with windowed prominence (signal-processing verb)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "events_peak_detection",
-    oracle="""
-    WITH d AS (
-      SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(count(*) AS BIGINT) AS x
-      FROM events GROUP BY 1
-    ),
-    w AS (
-      SELECT day, x,
-             lag(x) OVER win AS xp, lead(x) OVER win AS xn,
-             min(x) OVER (win ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
-               AS lmin,
-             min(x) OVER (win ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING)
-               AS rmin
-      FROM d
-      WINDOW win AS (ORDER BY day)
-    )
-    SELECT day, x AS n_events,
-           CAST(lmin AS BIGINT) AS left_min3,
-           CAST(rmin AS BIGINT) AS right_min3,
-           CAST(x - greatest(lmin, rmin) AS BIGINT) AS prominence
-    FROM w
-    WHERE xp IS NOT NULL AND xn IS NOT NULL AND x > xp AND x > xn
-    """,
-)
-def events_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOCAL PEAK DETECTION with windowed prominence — the signal-
-    processing verb behind spike triage: a day is a peak when it
-    strictly exceeds both neighbors (ties lose on both sides —
-    deterministic; series edges are never peaks), and its ±3-day
-    prominence is the height above the HIGHER of the two flanking
-    minima (the scipy find_peaks 'prominence' idea, window-bounded so
-    it stays one pass — true prominence chases monotone runs
-    arbitrarily far, which is the gaps-and-islands construction if
-    needed). All exact integers; four window functions share ONE
-    ordered frame spec.
-
-    Scale: daily collapse once; every window rides the same
-    calendar-bounded sort. Per-series peaks add partitionBy."""
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.count("*").cast("bigint").alias("x")
-    )
-    win = Window.orderBy("day")
-    w = d.select(
-        "day",
-        "x",
-        F.lag("x").over(win).alias("xp"),
-        F.lead("x").over(win).alias("xn"),
-        F.min("x").over(win.rowsBetween(-3, -1)).alias("lmin"),
-        F.min("x").over(win.rowsBetween(1, 3)).alias("rmin"),
-    )
-    return w.where(
-        F.col("xp").isNotNull()
-        & F.col("xn").isNotNull()
-        & (F.col("x") > F.col("xp"))
-        & (F.col("x") > F.col("xn"))
-    ).select(
-        "day",
-        F.col("x").alias("n_events"),
-        F.col("lmin").cast("bigint").alias("left_min3"),
-        F.col("rmin").cast("bigint").alias("right_min3"),
-        (F.col("x") - F.greatest("lmin", "rmin"))
-        .cast("bigint")
-        .alias("prominence"),
     )
 
 
@@ -3684,16 +3117,17 @@ def events_haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("i"),
         "x",
     )
-    # Loud growth guard (ADVICE r12): the 32-slot pad also TRUNCATES —
-    # both sides of the oracle pair drop day 33+ symmetrically, so a
-    # fixture that ever spans more than 32 days would silently ignore
-    # data while the hash stayed green. One bounded control-scalar
-    # count (≤ a few dozen groups) makes that day fail loudly instead.
+    # Loud growth guard: the 32-slot pad also TRUNCATES — both sides of
+    # the oracle pair drop day 33+ symmetrically, so a fixture that ever
+    # spans more than 32 days would silently ignore data while the hash
+    # stayed green. One bounded control-scalar count (≤ a few dozen
+    # groups) makes that day fail loudly instead.
     n_days = d.count()
-    assert n_days <= 32, (
-        f"events span {n_days} days > the 32-slot Haar frame; widen the"
-        " pyramid (next power of two) before trusting this decomposition"
-    )
+    if n_days > 32:
+        raise ValueError(
+            f"events span {n_days} days > the 32-slot Haar frame; widen the"
+            " pyramid (next power of two) before trusting this decomposition"
+        )
     base = (
         spark.range(32)
         .select(F.col("id").cast("bigint").alias("j"))
@@ -3857,49 +3291,4 @@ def analytics_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS BIGINT) AS BIGINT) AS tau_b_micro",
         "4 * (c - dd) * (c - dd) > (n0 - tx) * (n0 - ty)"
         " AND c > dd AS strong_positive",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Calendar heatmap matrix (dow × hour activity grid)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "events_calendar_heatmap",
-    oracle="""
-    SELECT CAST(date_part('dow', ts) + 1 AS BIGINT) AS dow,
-           CAST(date_part('hour', ts) AS BIGINT) AS hour,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-             AS value_cents
-    FROM events GROUP BY 1, 2
-    """,
-)
-def events_calendar_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CALENDAR HEATMAP MATRIX — the dow × hour activity grid every
-    operations dashboard renders (when is the system busy; when do
-    humans vs crons act): ≤7×24 cells with event counts, distinct
-    actors, and exact value cents. Trivial by construction and
-    included precisely because it is load-bearing: this is the
-    highest-frequency report shape in practice, and the dow
-    convention (Spark dayofweek 1=Sunday ⇄ DuckDB dow+1) is the
-    cross-engine trap the suite pins once so every future calendar id
-    inherits it.
-
-    Scale: one partial-agg'd (dow, hour) collapse — 168 cells
-    regardless of corpus size; the distinct-user count is the one
-    shuffle-heavy node, with the HLL swap named for unbounded actor
-    domains (events_dau_mau_stickiness_hll's pattern)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.dayofweek("ts").cast("bigint").alias("dow"),
-        F.hour("ts").cast("bigint").alias("hour"),
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.count_distinct("user_id").cast("bigint").alias("n_users"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("value_cents"),
     )

@@ -956,123 +956,6 @@ def agg_winsorized_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Synchronous label propagation (community detection, fixed rounds)
-# ---------------------------------------------------------------------------
-
-_LP_EDGES_SQL = """
-    ed AS (
-      SELECT DISTINCT 'c' || o_custkey AS src, 's' || l_suppkey AS dst
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    ), e AS (
-      SELECT src, dst FROM ed UNION ALL SELECT dst, src FROM ed
-    )
-"""
-
-
-def lp_initial_labels(sym: DataFrame) -> DataFrame:
-    """Every node starts as its own community (label = node id)."""
-    return (
-        sym.select("src")
-        .distinct()
-        .select(F.col("src").alias("node"), F.col("src").alias("lab"))
-    )
-
-
-def lp_vote_round(
-    sym: DataFrame, labels: DataFrame, broadcast_labels: bool = False
-) -> DataFrame:
-    """One synchronous LP round over a symmetric edge list: each node
-    adopts its neighbors' most frequent label, ties to the smallest —
-    deterministic, so both the 3-round unrolled query and the
-    converged loop (round9_ops) replay identically.
-
-    ``broadcast_labels=True`` is the iterated-loop path: the label
-    table is node-sized and each loop round's labels are checkpointed
-    (carry no stats — AQE would never pick the broadcast itself,
-    the bfs_distances rule), so broadcasting it turns the per-round
-    edge shuffle into a stationary-edges broadcast join; only the
-    much smaller (node, lab) vote pairs ever shuffle. The unrolled
-    3-round form keeps the default: its labels are a lazy intermediate
-    inside one fused plan, and broadcasting would materialize them."""
-    lab = F.broadcast(labels) if broadcast_labels else labels
-    votes = (
-        sym.join(lab, sym["dst"] == lab["node"])
-        .groupBy(sym["src"].alias("vnode"), "lab")
-        .agg(F.count("*").alias("votes"))
-    )
-    # Deterministic argmax via the row_number window (matches the
-    # QUALIFY oracle form). Measured note: a sort-free
-    # min_by(lab, struct(-votes, lab)) aggregate looks cheaper on paper
-    # but plans as ObjectHashAggregate outside whole-stage codegen and
-    # ran ~4x SLOWER at sf0.1 — the sort window stays codegen'd.
-    w = Window.partitionBy("vnode").orderBy(F.desc("votes"), "lab")
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(F.col("vnode").alias("node"), "lab")
-    )
-
-
-def _lp_round_sql(prev: str, cur: str) -> str:
-    """One synchronous LP round: adopt the most frequent neighbor label,
-    ties to the lexicographically smallest — fully deterministic."""
-    return f"""
-    {cur} AS (
-      SELECT e.src AS node, l.lab
-      FROM e JOIN {prev} l ON l.node = e.dst
-      GROUP BY e.src, l.lab
-      QUALIFY row_number() OVER (PARTITION BY e.src
-                                 ORDER BY count(*) DESC, l.lab) = 1
-    )"""
-
-
-@query(
-    "graph_label_propagation",
-    oracle=f"""
-    WITH {_LP_EDGES_SQL},
-    l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e),
-    {_lp_round_sql('l0', 'l1')},
-    {_lp_round_sql('l1', 'l2')},
-    {_lp_round_sql('l2', 'l3')}
-    SELECT lab AS community, CAST(count(*) AS BIGINT) AS n_members,
-           min(node) AS min_member, max(node) AS max_member
-    FROM l3 GROUP BY lab
-    """,
-)
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by SYNCHRONOUS label propagation (3 rounds)
-    over the customer-supplier co-order graph: every node adopts its
-    neighbors' most frequent label each round, ties broken to the
-    smallest label — which makes the normally run-order-dependent LP
-    algorithm fully deterministic, so the oracle can replay it as THREE
-    UNROLLED SQL rounds (aggregation inside a recursive CTE is not
-    portable; unrolling is) and hash-check the resulting community
-    histogram end-to-end. Asynchronous LP converges faster but is
-    schedule-dependent — the sync variant is the one a distributed
-    engine actually runs (Pregel supersteps).
-
-    Scale: each round is edges ⋈ labels (both shuffled on the same key
-    — co-partitioned across rounds) + a partial-agg'd vote count + a
-    per-node argmax window. The fused 3-round lazy plan avoids
-    per-round materialization; production iterate-to-convergence swaps
-    to the checkpointed-loop pattern of graph_pagerank (checkpoint
-    every ~5 rounds, broadcast OFF for the label side since it is
-    node-sized). Labels are node ids — width-bounded state, no
-    frontier blowup."""
-    from kdcloganalyzer_spark.plans.analytics import _coorder_edges
-
-    sym = _coorder_edges(spark, sf_dir)
-    labels = lp_initial_labels(sym)
-    for _ in range(3):
-        labels = lp_vote_round(sym, labels)
-    return labels.groupBy(F.col("lab").alias("community")).agg(
-        F.count("*").cast("long").alias("n_members"),
-        F.min("node").alias("min_member"),
-        F.max("node").alias("max_member"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # CDC MERGE apply (row-level upsert semantics)
 # ---------------------------------------------------------------------------
 

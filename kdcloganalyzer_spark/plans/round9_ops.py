@@ -1,6 +1,6 @@
-"""Round-9 operators: convergence-driven iteration and other additions
-beyond the reference's declared surface (README.md:4-13) that a 100 TB
-warehouse / training-data pipeline runs in production.
+"""Text-analysis, scan and pipeline operators beyond the reference's
+declared surface (README.md:4-13) that a 100 TB warehouse /
+training-data pipeline runs in production.
 
 Conventions match plans/round8_ops.py: integer micro-units for anything
 that hashes across engines, control scalars collected driver-side, hot
@@ -13,296 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans.registry import query
-
-# ---------------------------------------------------------------------------
-# Label propagation iterated to a fixed point
-# ---------------------------------------------------------------------------
-
-
-def _lp_changed(a: DataFrame, b: DataFrame) -> int:
-    return (
-        a.alias("n")
-        .join(b.alias("p"), "node")
-        .where(F.col("n.lab") != F.col("p.lab"))
-        .count()
-    )
-
-
-def _lp_step_checkpoint(nxt2: DataFrame, labels: DataFrame):
-    """(node, lab, prev) eagerly checkpointed with the changed-label
-    count OBSERVED on the materialization pass itself — the
-    connected-components idiom (operators/dedup.py): convergence
-    detection rides the checkpoint action instead of paying a separate
-    node-keyed join+count action per step (r16, guide §2.1/§5 — the
-    loop's fixed cost is its eager actions)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    step = (
-        nxt2.join(
-            labels.select("node", F.col("lab").alias("prev")), "node"
-        )
-        .observe(
-            obs,
-            F.sum((F.col("lab") != F.col("prev")).cast("long")).alias(
-                "changed"
-            ),
-        )
-        .localCheckpoint()
-    )
-    return step, int(obs.get["changed"] or 0)
-
-
-def lp_converged_labels(
-    sym: DataFrame, max_rounds: int = 10
-) -> tuple[DataFrame, int, str]:
-    """Synchronous label propagation iterated to its LIMIT SET:
-    either a fixed point (no node changes its label) or the period-2
-    limit cycle synchronous LP is known to enter on bipartite structure
-    (Raghavan et al. 2007 note the oscillation; the co-order
-    customer-supplier graph here IS bipartite, and measurably settles
-    into all-nodes-flip-every-round by round ~4). Returns
-    (labels, rounds_run, stop_reason in {'fixed_point','cycle','cap'}).
-
-    The loop advances TWO votes per step — labels_{t+2} =
-    vote(vote(labels_t)) as ONE fused lazy plan with a single eager
-    localCheckpoint — because comparing labels_{t+2} against labels_t
-    detects BOTH stop conditions in one node-keyed count join (equal ∧
-    fixed point, equal ∧ 2-cycle); one extra lazy vote then separates
-    the two. Halving the checkpoint/count cadence matters: eager
-    materialization is the loop's fixed cost (BFS discipline —
-    operators/graph.py:bfs_distances, lineage O(1), no session-conf
-    mutation, AQE right-sizes the per-round shuffles).
-
-    On a 2-cycle the returned labels are canonicalized as the per-node
-    MIN over the two phases, so the result is a function of the graph,
-    not of which phase the detector happened to stop in."""
-    from pyspark.sql import Observation
-
-    from kdcloganalyzer_spark.plans.round8_ops import (
-        lp_initial_labels,
-        lp_vote_round,
-    )
-
-    # Node count for the broadcast gate rides the init checkpoint's own
-    # materialization (r16) — no separate count() action.
-    obs0 = Observation()
-    labels = (
-        lp_initial_labels(sym)
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    # Size-gate the per-round broadcast of the node-sized label table
-    # (checkpointed frames carry no stats, so the explicit hint is the
-    # only way — the bfs_distances rule); beyond the gate fall back to
-    # the plain co-partitioned shuffle join.
-    bcast = int(obs0.get["n"]) <= 2_000_000
-    rounds = 0
-    while rounds + 2 <= max_rounds:
-        step, changed = _lp_step_checkpoint(
-            lp_vote_round(sym, lp_vote_round(sym, labels, bcast), bcast),
-            labels,
-        )
-        rounds += 2
-        nxt2 = step.select("node", "lab")
-        if changed == 0:
-            # limit set reached at period 1 or 2: ONE more vote — its
-            # phase comparison also observed on its own checkpoint.
-            stepped, moved = _lp_step_checkpoint(
-                lp_vote_round(sym, nxt2, bcast), nxt2
-            )
-            if moved == 0:
-                return nxt2, rounds, "fixed_point"
-            # 2-cycle: canonicalize as the per-node min over the two
-            # phases — both already sit on the stepped checkpoint
-            # (lab = phase b, prev = phase a), so no extra join.
-            canon = stepped.select(
-                "node", F.least("lab", "prev").alias("lab")
-            )
-            return canon, rounds, "cycle"
-        labels = nxt2
-    return labels, rounds, "cap"
-
-
-@query("graph_label_propagation_converged")
-def graph_label_propagation_converged(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Community detection by synchronous label propagation iterated TO
-    ITS LIMIT SET with delta-count early exit — the production
-    iteration story for the graph tier (graph_label_propagation is the
-    3-round unrolled, oracle-checkable form; this one runs until the
-    labeling stops evolving: fixed point, or the period-2 limit cycle
-    synchronous LP provably enters on bipartite graphs like this
-    customer-supplier one, canonicalized as per-node min over the two
-    phases; capped at 10 rounds as the backstop).
-
-    Rows-only by design: the round count is data-dependent, so the
-    result isn't expressible as fixed SQL (aggregation inside a
-    recursive CTE is not portable). Laws pytest-pinned instead
-    (tests/test_round9_ops.py): (1) limit-set — a manual replay
-    confirms labels_{t} == labels_{t-2} at the reported round and the
-    canonical output equals the min over the two phases; (2) a
-    fixed-point stop admits no further label change; (3) the
-    registered query reports the loop's own rounds/reason.
-
-    Scale: each step is TWO fused vote rounds (edges-with-labels
-    shuffle + partial-agg'd vote count + per-node argmax, exactly the
-    unrolled form's plan) behind one eager checkpoint and one
-    node-keyed count join; quiet graphs pay their mixing time, not a
-    configured worst case, and the emitted n_rounds/stop_reason
-    columns make truncation observable downstream.
-
-    Cost note (BASELINE r9): this corpus cycles at round 6, so the
-    loop pays ~2x the unrolled 3-round form by construction — the
-    honest price of convergence-driven iteration, linear per round
-    with the early exit, not a scale defect."""
-    from kdcloganalyzer_spark.plans.analytics import _coorder_edges
-
-    sym = _coorder_edges(spark, sf_dir)
-    labels, rounds, reason = lp_converged_labels(sym, max_rounds=10)
-    return (
-        labels.groupBy(F.col("lab").alias("community"))
-        .agg(
-            F.count("*").cast("long").alias("n_members"),
-            F.min("node").alias("min_member"),
-            F.max("node").alias("max_member"),
-        )
-        .withColumn("n_rounds", F.lit(rounds).cast("int"))
-        .withColumn("stop_reason", F.lit(reason))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-mix curation: quota sampling and deterministic interleave
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "pipeline_quota_sampler",
-    oracle="""
-    SELECT doc_id, source, CAST(rk AS INT) AS sample_rank FROM (
-      SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-      FROM documents
-    ) WHERE rk <= 120
-    """,
-)
-def pipeline_quota_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source QUOTA sampling for training-mix curation: every source
-    contributes at most 120 documents, chosen by the deterministic
-    md5(doc_id) rank — the reproducible stand-in for 'uniformly at
-    random per source' that survives reruns, backfills and engine
-    changes (the sampling decision is a pure function of the key, the
-    same contract as sample_stratified_md5, but with an exact per-group
-    COUNT cap, which Bernoulli sampling cannot give).
-
-    Scale: one shuffle on source + a rank window. Sources are few and
-    can be huge (the classic skew), so at 100 TB the window form is
-    replaced by the two-phase top-K: per-partition TakeOrdered(quota)
-    partial results, then a quota-sized merge per source — same
-    semantics, no full per-source sort; AQE skew-split covers the
-    window form in the meantime. The md5 rank also means INCREMENTAL
-    ingestion keeps prior picks stable except at the quota boundary."""
-    from kdcloganalyzer_spark.sources.tables import load_table
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        docs.select("doc_id", "source")
-        .withColumn("sample_rank", F.row_number().over(w))
-        .where(F.col("sample_rank") <= 120)
-        .withColumn("sample_rank", F.col("sample_rank").cast("int"))
-    )
-
-
-@query(
-    "pipeline_interleave_sources",
-    oracle="""
-    WITH ranked AS (
-      SELECT doc_id, source,
-             row_number() OVER (PARTITION BY source
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS rk,
-             dense_rank() OVER (ORDER BY source) - 1 AS src_idx,
-             count(DISTINCT source) OVER () AS n_src
-      FROM documents
-    )
-    SELECT doc_id, source,
-           CAST(rk * n_src + src_idx AS BIGINT) AS mix_pos
-    FROM ranked
-    """,
-)
-def pipeline_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ROUND-ROBIN interleave of corpus sources — the
-    'mix the sources evenly through the epoch' ordering every
-    multi-corpus training run needs (a plain concat trains on source A
-    for hours before seeing B; a global random shuffle loses source
-    balance in any prefix). Each document's global mix position is
-    rk * n_sources + source_index, with rk the deterministic md5 rank
-    within its source: any PREFIX of the ordering is source-balanced
-    to within one document, and the whole ordering is a pure function
-    of the keys (reproducible epochs).
-
-    Scale: one shuffle on source for the rank window plus two
-    broadcast-sized side computations (source index, source count) —
-    at 100 TB the writer sorts by mix_pos into shards
-    (repartitionByRange), which is exactly pipeline_global_shuffle's
-    story with a balance guarantee instead of a random one."""
-    from kdcloganalyzer_spark.sources.tables import load_table
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    # r15: ONE bounded collect supplies both control values (source
-    # count and each source's dense index = position in sort order) —
-    # the old form paid a count() action plus a distinct+rank subtree
-    # inside the main job, i.e. two extra documents scans and a join.
-    sources = sorted(
-        row[0] for row in docs.select("source").distinct().collect()
-    )
-    # Bounded-domain contract, failed loud (ADVICE r15): a NULL source
-    # would TypeError inside sorted() above with an opaque message, and
-    # create_map rejects NULL keys outright — assert the precondition
-    # where the fix is obvious. The literal map stays cheap up to ~64
-    # sources (the repo's measured codegen-recompile bound for fresh
-    # literal expressions, CLAUDE.md r12); above that, switch to a
-    # broadcast join against the collected (source, idx) frame.
-    assert all(s is not None for s in sources), (
-        "pipeline_interleave_sources: NULL source value — the dense "
-        "source index requires non-null sources"
-    )
-    assert len(sources) <= 64, (
-        f"pipeline_interleave_sources: {len(sources)} sources exceeds "
-        "the literal-map codegen bound; use a broadcast-join index"
-    )
-    n_src = len(sources)
-    idx_map = F.create_map(
-        *[
-            lit
-            for i, s in enumerate(sources)
-            for lit in (F.lit(s), F.lit(i))
-        ]
-    )
-    return (
-        docs.withColumn("rk", F.row_number().over(w) - 1)
-        .select(
-            "doc_id",
-            "source",
-            (
-                F.col("rk") * n_src
-                + F.element_at(idx_map, F.col("source"))
-            )
-            .cast("long")
-            .alias("mix_pos"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # Text analysis: co-occurrence lift and within-doc repetition

@@ -129,24 +129,28 @@ def generate_logs(
     return out_dir
 
 
-def synth_path_for_sf(sf_dir: str) -> str:
-    """Deterministic corpus dir for an sf — path only, NO generation
-    (safe at import time; oracle SQL strings embed this path)."""
+def records_for_sf(sf_dir: str) -> int:
+    """Records in the synthetic KDC corpus for an sf dir: 1M per sf unit
+    (sf0.001 → 1k, sf0.01 → 10k, sf0.1 → 100k, ~700k lines), at least
+    200; a dir name carrying no ``sf<N>`` counts as sf0.001. The one
+    sizing rule behind both the corpus path and the records-parquet
+    file count."""
     import re
 
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.001
-    n = max(200, int(1_000_000 * sf))
+    return max(200, int(1_000_000 * sf))
+
+
+def synth_path_for_sf(sf_dir: str) -> str:
+    """Deterministic corpus dir for an sf — path only, NO generation
+    (safe at import time; oracle SQL strings embed this path)."""
     # v2: TGS-success records carry the enctype-negotiation line (bump the
     # dir name to invalidate pre-change cached corpora in /tmp).
-    return f"/tmp/kdc_synth_v2_{n}"
+    return f"/tmp/kdc_synth_v2_{records_for_sf(sf_dir)}"
 
 
 def synth_dir_for_sf(sf_dir: str) -> str:
-    """Map a driver sf dir to a generated KDC log dir (1M records/sf unit).
-
-    sf0.001 → 1k records, sf0.01 → 10k, sf0.1 → 100k (~700k lines).
-    """
-    out = synth_path_for_sf(sf_dir)
-    n = int(out.rsplit("_", 1)[1])
-    return generate_logs(out, n)
+    """Map a driver sf dir to its generated KDC log dir (generating it
+    on first use; sized by ``records_for_sf``)."""
+    return generate_logs(synth_path_for_sf(sf_dir), records_for_sf(sf_dir))

@@ -6,6 +6,7 @@ express: determinism, plan shape, and threshold semantics.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans import registry
@@ -88,3 +89,76 @@ def test_pipeline_funnel_is_monotonic(spark, sf_dir):
     for a, b in zip(rows, rows[1:]):
         assert b.n_docs <= a.n_docs
         assert b.n_tokens <= a.n_tokens
+
+
+def test_dedup_rate_hll_matches_python_replay(spark, sf_dir):
+    """Per-source exact counts and the trunc-div micro rate must equal
+    a pandas replay of the first-8-words md5 fingerprint convention,
+    and every source's envelope flag must be TRUE."""
+    import hashlib
+
+    from kdcloganalyzer_spark.sources.tables import load_table
+
+    out = {
+        r["source"]: r
+        for r in registry.QUERIES["pipeline_dedup_rate_hll"](
+            spark, sf_dir
+        ).collect()
+    }
+    docs = load_table(spark, sf_dir, "documents").select(
+        "source", "text"
+    ).collect()
+    per: dict[str, tuple[int, set]] = {}
+    for r in docs:
+        fp = hashlib.md5(
+            " ".join(r["text"].split(" ")[:8]).encode()
+        ).hexdigest()
+        n, s = per.setdefault(r["source"], [0, set()])
+        per[r["source"]][0] += 1
+        s.add(fp)
+    assert set(per) == set(out)
+    for src, (n, s) in per.items():
+        row = out[src]
+        assert row["n_docs"] == n and row["n_unique"] == len(s)
+        assert row["dup_rate_micro"] == (n - len(s)) * 1_000_000 // n
+        assert row["hll_in_envelope"]
+
+
+@pytest.mark.parametrize(
+    "sources, match",
+    [
+        ([None, None, "web"], "NULL source"),
+        ([f"s{i:02d}" for i in range(65)], "65 sources"),
+    ],
+    ids=["null_source", "65_sources"],
+)
+def test_interleave_rejects_unindexable_sources(
+    spark, tmp_path, sources, match
+):
+    """A NULL source or more sources than the literal-map bound is a
+    data-contract violation: a ValueError, not a stripped-under-``-O``
+    assert."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = {"doc_id": list(range(len(sources))), "source": sources}
+    pq.write_table(pa.table(docs), tmp_path / "documents.parquet")
+    with pytest.raises(ValueError, match=match):
+        registry.QUERIES["pipeline_interleave_sources"](spark, str(tmp_path))
+
+
+def test_rake_stopwords_match_literally(spark):
+    """A stopword is matched as a literal token: a regex metacharacter
+    in it must not widen the match to other tokens."""
+    from kdcloganalyzer_spark.plans.round11_ops import _stopword_regex
+
+    out = (
+        spark.range(1)
+        .select(
+            F.regexp_replace(
+                F.lit(" axc a.c abc "), _stopword_regex(("a.c", "c++")), "|"
+            ).alias("s")
+        )
+        .first()["s"]
+    )
+    assert out == " axc | abc "

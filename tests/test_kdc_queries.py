@@ -103,3 +103,21 @@ def test_sink_tsv_roundtrip(spark, sf_dir):
     rt = registry.QUERIES["sink_tsv_text"](spark, sf_dir)
     assert rt.count() == ut.count()
     assert rt.columns == ["client", "first_ts", "last_ts", "n"]
+
+
+def test_records_sizing_follows_the_corpus_rule(monkeypatch):
+    """The synth corpus size and the records-parquet file count come
+    from one sf→records rule, even when the corpus is staged under a
+    path that carries no record count."""
+    from kdcloganalyzer_spark.plans import kdc_queries
+    from kdcloganalyzer_spark.sources import kdc_synth
+
+    for sf_dir in ("/d/sf0.001", "/d/sf0.1", "/d/sf4", "/d/no_scale"):
+        n = kdc_synth.records_for_sf(sf_dir)
+        assert kdc_synth.synth_path_for_sf(sf_dir).endswith(f"_{n}")
+    assert kdc_synth.records_for_sf("/d/sf4") == 4_000_000
+    monkeypatch.setattr(
+        kdc_queries, "synth_path_for_sf", lambda sf_dir: "/work/corpus"
+    )
+    assert kdc_queries.records_files_for_sf("/d/sf4") == 2
+    assert kdc_queries.records_files_for_sf("/d/sf0.1") == 1

@@ -365,7 +365,9 @@ def test_multiprobe_widens_candidates_at_equal_tables(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     single = S.topk_cosine_lsh(emb, n_queries=5, k=10, n_tables=2)
-    multi = S.topk_cosine_lsh_multiprobe(emb, n_queries=5, k=10, n_tables=2)
+    multi = S.topk_cosine_lsh(
+        emb, n_queries=5, k=10, n_tables=2, multiprobe=True
+    )
 
     def best(df):
         out = {}

@@ -2,20 +2,28 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kdcloganalyzer_spark.plans import registry
-from kdcloganalyzer_spark.plans.analytics import _coorder_edges
-from kdcloganalyzer_spark.plans.round8_ops import (
+from kdcloganalyzer_spark.plans.analytics import (
+    _coorder_edges,
+    lp_converged_labels,
     lp_initial_labels,
     lp_vote_round,
 )
-from kdcloganalyzer_spark.plans.round9_ops import (
-    _lp_changed,
-    lp_converged_labels,
-)
 
 registry.load_all()
+
+
+def _lp_changed(a: DataFrame, b: DataFrame) -> int:
+    """Nodes whose label differs between two label tables."""
+    return (
+        a.alias("n")
+        .join(b.alias("p"), "node")
+        .where(F.col("n.lab") != F.col("p.lab"))
+        .count()
+    )
 
 
 def test_label_propagation_limit_set_law(spark, sf_dir):

@@ -7,6 +7,13 @@ Usage:
     python tools/bench_ids.py <id> [<id> ...]
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/bench_ids.py ...
 
+Scale rehearsals run the same way against a rehearsal dataset
+(tools/build_sf1.py, tools/build_sf3.py):
+    SPARK_GRAFT_SF_DIR=/tmp/rehearsal/sf1 python tools/bench_ids.py ...
+
+An id that raises is recorded as ``{"error": ...}`` and the run carries
+on; the exit status is 1 if any id failed.
+
 Same env contract as bench.py (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS).
 Not part of the driver contract — a developer tool only.
 """
@@ -43,18 +50,25 @@ def main() -> None:
         fn = registry.QUERIES[qid]
         spark.sparkContext.setJobDescription(f"bench_ids: {qid}")
         runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        out[qid] = {
-            "min": round(min(runs), 3),
-            "median": round(sorted(runs)[1], 3),
-            "runs": [round(r, 3) for r in runs],
-        }
+        try:
+            for _ in range(3):
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                runs.append(time.perf_counter() - t0)
+        except Exception as ex:  # noqa: BLE001 — recorded and counted
+            out[qid] = {"error": f"{type(ex).__name__}: {str(ex)[:200]}"}
+        else:
+            out[qid] = {
+                "min": round(min(runs), 3),
+                "median": round(sorted(runs)[1], 3),
+                "runs": [round(r, 3) for r in runs],
+            }
         print(json.dumps({qid: out[qid]}), flush=True)
     spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"all": out}))
+    n_failed = sum("error" in r for r in out.values())
+    print(json.dumps({"all": out, "failed": n_failed}))
+    if n_failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
