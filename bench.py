@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans import registry
 from kdcloganalyzer_spark.session import DEFAULT_CPUS, get_spark
 
@@ -284,23 +285,6 @@ def _warm_streaming_engine(spark) -> None:
         pass
 
 
-def _evict_amortized(qid: str) -> bool:
-    """Clear every amortized cache `qid` reads through so a repeat run
-    is genuinely cold. r14: routed through the appcache eviction
-    registry (each plan module registers its caches with the qids they
-    serve — stream results, ANN indexes, PCA/HITS/coreset reports, the
-    kdc_records persist, bucketed tables, BPE merges, LP labels,
-    staged CSV dirs), so min-of-N cold sampling applies uniformly
-    instead of stream-only (VERDICT r13 item 2). Returns True if at
-    least one cache was cleared."""
-    try:
-        from kdcloganalyzer_spark import appcache
-
-        return appcache.evict_for(qid)
-    except Exception:  # noqa: BLE001 — bench must survive anything
-        return False
-
-
 def _local_table_path(
     here: str,
     load_inflated: bool,
@@ -467,7 +451,7 @@ def main() -> None:
                 # load-robustness rationale as min-of-3 on warm runs.
                 colds = [runs[0]]
                 for _ in range(2):
-                    if not _evict_amortized(qid):
+                    if not appcache.evict_for(qid):
                         break
                     t0 = time.perf_counter()
                     fn(spark, sf_dir).write.format("noop").mode(

@@ -1,113 +1,117 @@
-"""Hygiene for app-scoped module-level caches and staged temp dirs.
+"""Per-session amortized builds, their eviction registry, and staged dirs.
 
-The plan modules amortize expensive index builds (minhash signatures,
-IVF/PQ quantizers, symmetric edge lists, the KDC records table) in
-module-level dicts keyed on ``(applicationId, sf_dir, ...)``. That is the
-right contract for a long-lived session, but a process that creates and
-stops several SparkSessions (pytest does exactly that) would otherwise
-accumulate dead-app entries forever, pinning lazy localCheckpoint blocks
-for the process lifetime — ADVICE r5. ``evict_stale`` drops every entry
-whose applicationId is not the live one; each cache getter calls it
-before its own lookup, so the caches are bounded by one app's working
-set.
+Parse once, query many: a build that several query ids read — the KDC
+records persist, ANN quantizers, MinHash signatures, graph edge lists,
+iterative reports, bounded-stream results — is a function decorated
+with ``amortized(consumers)``. The decorator memoizes it under
+``(applicationId, sf_dir, *args)`` and drops the entries of stopped
+applications on every lookup, so a process that creates and stops
+several SparkSessions (pytest does) holds one app's working set, never
+a dead app's blocks. It also registers an evictor for its consumer ids:
+``evict_for(qid)`` clears every build ``qid`` reads through, which is how
+the bench re-samples an amortized id genuinely cold.
 
-``tempdir`` is ``tempfile.mkdtemp`` plus an atexit ``shutil.rmtree`` so
-staged inputs / streaming checkpoints don't outlive the process.
+``tempdir`` is ``tempfile.mkdtemp`` plus an atexit ``shutil.rmtree``, so
+per-call sinks, staged inputs and streaming checkpoints don't outlive
+the process; ``persistent_stage`` is the cross-process staged-input dir.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
 import shutil
 import tempfile
-from collections.abc import Callable
+from collections import Counter
+from collections.abc import Callable, Collection
 
-#: (matcher, evictor) pairs — the bench's min-of-N COLD protocol
-#: (VERDICT r13 item 2) asks each amortized cache to be clearable BY
-#: QUERY ID, so a re-run is genuinely cold. Matchers answer "does this
-#: qid read through the cache I guard"; evictors drop the entries (and
-#: best-effort unpersist DataFrames). Registered by the owning plan
-#: module at import, consumed by bench.py.
+from py4j.protocol import Py4JJavaError
+
+#: (matcher, evict) pairs: ``matcher(qid)`` is True for every query id
+#: whose plan reads through the guarded cache, ``evict()`` empties it.
 _EVICTORS: list[tuple[Callable[[str], bool], Callable[[], None]]] = []
+
+#: Every ``amortized`` build, in definition order.
+BUILDS: list[Callable] = []
+
+#: Exceptions caught and not re-raised, by site.
+SWALLOWED: Counter[str] = Counter()
 
 
 def register_evictor(
     matcher: Callable[[str], bool], evict: Callable[[], None]
 ) -> None:
-    """Register an amortized-cache eviction hook.
-
-    ``matcher(qid)`` must return True for every query id whose plan
-    reads through the guarded cache (so evicting for that id makes its
-    re-run cold); ``evict()`` clears the cache unconditionally."""
+    """Register an eviction hook for a cache that is not an
+    ``amortized`` build (e.g. catalog tables)."""
     _EVICTORS.append((matcher, evict))
 
 
 def evict_for(qid: str) -> bool:
-    """Clear every registered cache that ``qid`` reads through.
-
-    Returns True iff at least one cache was cleared — the bench uses
-    this as "a genuinely-cold re-sample is possible for this id". Both
-    matcher and evictor failures are swallowed: cache hygiene must
-    never kill a bench or test run."""
+    """Clear every registered cache that ``qid`` reads through; True iff
+    at least one matched."""
     hit = False
     for matcher, evict in _EVICTORS:
-        try:
-            if matcher(qid):
-                evict()
-                hit = True
-        except Exception:  # noqa: BLE001 — hygiene is best-effort
-            pass
+        if matcher(qid):
+            evict()
+            hit = True
     return hit
 
 
-def dict_cache_evictor(cache: dict) -> Callable[[], None]:
-    """Evictor for the standard app-scoped dict cache: pop every entry
-    and best-effort unpersist any DataFrame values (tuple values are
-    unpacked — the ANN index caches store (df, codebook) pairs). The
-    popped reference is the real cleanup; a failed unpersist only
-    delays block reclamation to app exit."""
+def amortized(consumers: Collection[str] | str):
+    """Memoize a build ``(spark, sf_dir, *args)`` per live application.
 
-    def _evict() -> None:
-        for k in list(cache):
-            v = cache.pop(k, None)
-            items = v if isinstance(v, tuple) else (v,)
-            for item in items:
-                unpersist = getattr(item, "unpersist", None)
-                if callable(unpersist):
-                    try:
-                        unpersist()
-                    except Exception:  # noqa: BLE001
-                        pass
+    ``consumers`` names the query ids whose plans read through the build:
+    a collection of ids, or a module's ``__name__`` for every id that
+    module registers. Eviction pops every entry and unpersists the
+    DataFrames among its values (tuple values are unpacked). The
+    decorated function exposes ``cache`` and ``consumers``."""
+    if isinstance(consumers, str):
+        module = consumers
 
-    return _evict
+        def reads(qid: str) -> bool:
+            from kdcloganalyzer_spark.plans.registry import QUERIES
 
+            fn = QUERIES.get(qid)
+            return fn is not None and fn.__module__ == module
 
-def module_ids_matcher(module_name: str) -> Callable[[str], bool]:
-    """Matcher: every qid registered by ``module_name`` — the right
-    scope for a cache that (nearly) every query in one plan module
-    reads through (e.g. the kdc_records persist)."""
+    else:
+        consumers = frozenset(consumers)
+        if not consumers:
+            raise ValueError("an amortized build needs a consumer query id")
+        reads = consumers.__contains__
 
-    def _match(qid: str) -> bool:
-        from kdcloganalyzer_spark.plans import registry
+    def deco(build: Callable) -> Callable:
+        cache: dict[tuple, object] = {}
 
-        fn = registry.QUERIES.get(qid)
-        return fn is not None and fn.__module__ == module_name
+        def evict() -> None:
+            while cache:
+                _, value = cache.popitem()
+                for item in value if isinstance(value, tuple) else (value,):
+                    if callable(getattr(item, "unpersist", None)):
+                        try:
+                            item.unpersist()
+                        except Py4JJavaError:
+                            # its application has stopped; the blocks
+                            # died with it
+                            SWALLOWED["appcache.unpersist"] += 1
 
-    return _match
+        @functools.wraps(build)
+        def cached(spark, sf_dir: str, *args):
+            app = spark.sparkContext.applicationId
+            for key in [k for k in cache if k[0] != app]:
+                del cache[key]
+            key = (app, sf_dir, *args)
+            if key not in cache:
+                cache[key] = build(spark, sf_dir, *args)
+            return cache[key]
 
+        cached.cache = cache
+        cached.consumers = consumers
+        register_evictor(reads, evict)
+        BUILDS.append(cached)
+        return cached
 
-def evict_stale(cache: dict, spark) -> None:
-    """Drop cache entries from stopped SparkSessions.
-
-    Keys must be tuples whose first element is the owning applicationId
-    (the convention every app-scoped cache here follows). Entries of the
-    LIVE app are untouched; dead-app DataFrames can't be unpersisted
-    through their stopped session, so dropping the reference is all the
-    cleanup there is (the JVM-side blocks died with the app).
-    """
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if isinstance(k, tuple) and k and k[0] != app]:
-        cache.pop(k, None)
+    return deco
 
 
 def persistent_stage(tag: str, srcs: list[str], build) -> str:

@@ -60,67 +60,18 @@ def oracle_sql_for(qid: str, sf_dir: str) -> str:
     """Registered oracle SQL adapted to ``sf_dir``: the KDC / synth /
     schema-evolution oracles embed the DRIVER's sf0.01 staging paths as
     static strings (the driver gate always runs there); for any other
-    sf, swap in that sf's deterministic paths. Shared by the CLI
-    ``verify`` subcommand and tests/test_queries_oracle.py — without
-    the rewrite, a verify at sf0.001 would compare Spark@sf0.001
-    against DuckDB@sf0.01 and spuriously fail."""
-    from kdcloganalyzer_spark.plans import (
-        kdc_queries,
-        registry,
-        relational,
-        round9_ops,
-        round11_ops,
-        round12_ops,
-        streaming_queries,
-    )
-    from kdcloganalyzer_spark.sources.kdc_synth import synth_path_for_sf
+    sf, swap in that sf's deterministic paths (``registry.driver_path``),
+    then the sf dir itself. Shared by the CLI ``verify`` subcommand and
+    tests/test_queries_oracle.py — without the rewrite, a verify at
+    sf0.001 would compare Spark@sf0.001 against DuckDB@sf0.01 and
+    spuriously fail."""
+    from kdcloganalyzer_spark.plans import registry
 
-    return (
-        registry.ORACLES[qid]
-        .replace(
-            streaming_queries.DRIVER_TAIL_RECORDS_GLOB,
-            streaming_queries.tail_records_path_for_sf(sf_dir)
-            + "/*.parquet",
-        )
-        .replace(
-            kdc_queries.DRIVER_RECORDS_GLOB,
-            kdc_queries.records_path_for_sf(sf_dir) + "/*.parquet",
-        )
-        .replace(kdc_queries.DRIVER_SYNTH_DIR, synth_path_for_sf(sf_dir))
-        .replace(
-            relational.DRIVER_EVO_GLOB,
-            relational.evolution_path_for_sf(sf_dir) + "/*/*.parquet",
-        )
-        .replace(
-            relational.DRIVER_MLJSON,
-            relational.multiline_json_path_for_sf(sf_dir),
-        )
-        .replace(
-            relational.DRIVER_COMMITLOG,
-            relational.commit_log_path_for_sf(sf_dir),
-        )
-        .replace(
-            relational.DRIVER_BINFILES,
-            relational.binfiles_path_for_sf(sf_dir),
-        )
-        .replace(
-            relational.DRIVER_NESTED,
-            relational.nested_path_for_sf(sf_dir),
-        )
-        .replace(
-            round9_ops.DRIVER_HIVEPART,
-            round9_ops.hive_part_path_for_sf(sf_dir),
-        )
-        .replace(
-            round9_ops.DRIVER_CORRUPT,
-            round9_ops.corrupt_scan_path_for_sf(sf_dir),
-        )
-        .replace(
-            round11_ops.DRIVER_ORDERS_RAW,
-            f"{sf_dir}/orders.parquet",
-        )
-        .replace(round12_ops.DRIVER_SF_DIR, sf_dir)
-    )
+    registry.load_all()
+    sql = registry.ORACLES[qid]
+    for driver, local in registry.DRIVER_PATHS:
+        sql = sql.replace(driver, local(sf_dir))
+    return sql.replace(registry.DRIVER_SF, sf_dir)
 
 
 #: Spark type names whose values must stay integral end-to-end; a DuckDB

@@ -610,33 +610,6 @@ _PAGERANK_ORACLE = f"""
     """
 
 
-# Symmetrized co-order edge list, materialized once per (session, sf) —
-# the same amortized-build contract as the ANN indexes (sim_search_ivf's
-# cached cells): a graph-analytics deployment derives the edge list once
-# and runs many algorithms over it. Keyed on applicationId (CPython can
-# reuse a stopped session's id()).
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# Eviction hooks (ADVICE r14): without these, the graph ids reading
-# through the shared edge caches fall back to single-sample cold in the
-# bench's min-of-3 protocol — the one family the r14 registry missed.
-appcache.register_evictor(
-    lambda qid: qid
-    in (
-        "graph_degree_stats",
-        "graph_pagerank",
-        "graph_bfs_distance",
-        "graph_kcore_peel",
-        "graph_community_modularity",
-        "graph_degree_assortativity",
-        "graph_hits_bipartite",
-        "graph_label_propagation",
-        "graph_label_propagation_converged",
-    ),
-    appcache.dict_cache_evictor(_EDGE_CACHE),
-)
-
-
 def _lineitem_num_rows(sf_dir: str) -> int:
     """Free row count from parquet footers, tolerant of BOTH layouts:
     a single driver-written file and a Spark-written directory of part
@@ -661,65 +634,76 @@ def _lineitem_num_rows(sf_dir: str) -> int:
         return 0
 
 
+# Symmetrized co-order edge list, materialized once per (session, sf):
+# a graph-analytics deployment derives the edge list once and runs many
+# algorithms over it.
+@appcache.amortized(
+    {
+        "graph_degree_stats",
+        "graph_pagerank",
+        "graph_bfs_distance",
+        "graph_kcore_peel",
+        "graph_community_modularity",
+        "graph_degree_assortativity",
+        "graph_hits_bipartite",
+        "graph_label_propagation",
+        "graph_label_propagation_converged",
+    }
+)
 def _coorder_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_EDGE_CACHE, spark)
-    if key not in _EDGE_CACHE:
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey"
+    )
+    ed = (
+        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
         )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        ed = (
-            orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-            .select(
-                F.concat(F.lit("c"), F.col("o_custkey")).alias("src"),
-                F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst"),
-            )
-            .distinct()
-        )
-        sym = ed.unionAll(
-            ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        # r15: hash-partition the cached edge set by src before
-        # materializing it. localCheckpoint/persist preserve the
-        # physical partitioning, and hashpartitioning(src) satisfies
-        # every downstream ClusteredDistribution whose keys INCLUDE src
-        # (the subset rule) — so LP vote rounds (groupBy(src, lab) +
-        # argmax window on src), the degree aggregate, and the
-        # assortativity joins all run with ZERO further exchanges per
-        # pass. Width is scale-adaptive from the free footer row count
-        # (the r13 gated-operator rule: checkpointed frames carry no
-        # stats, so AQE can never right-size them) — one build-time
-        # exchange buys exchange-free iteration for all nine consumers.
-        # Width: volume-adaptive (≈500k edge rows per partition, the
-        # pagerank loop's measured grain), floor 8 — the A/B optimum
-        # at sf0.1: 4 parts starve the assortativity/modularity joins
-        # (0.8 → 2.0 s), 32 parts drown the LP loop's many small
-        # per-round actions in task scheduling (5.9 → 9.2 s), 8 wins
-        # both (family sum 27.3 → 17.2 s) — capped at the session's
-        # parallelism.
-        n_li = _lineitem_num_rows(sf_dir)
-        parallelism = spark.sparkContext.defaultParallelism
-        parts = (
-            min(parallelism, max(8, (2 * n_li) // 500_000 + 1))
-            if n_li
-            else parallelism
-        )
-        sym = sym.repartition(parts, "src")
-        # eager=False: plan-only callers (CLI --explain) shouldn't pay
-        # the edge derivation; the first action materializes it once.
-        # Storage by volume (same rule as _copart_edges, r14): big
-        # symmetric edge lists cache as compressed columnar batches
-        # instead of checkpoint row blocks — string-keyed src/dst rows
-        # are ~3x wider than the co-part longs, so the heap math that
-        # OOM'd the sf3 triangle bites here even sooner.
-        if n_li > 1_500_000:
-            _EDGE_CACHE[key] = sym.persist()
-        else:
-            _EDGE_CACHE[key] = sym.localCheckpoint(eager=False)
-    return _EDGE_CACHE[key]
+        .distinct()
+    )
+    sym = ed.unionAll(
+        ed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    # r15: hash-partition the cached edge set by src before
+    # materializing it. localCheckpoint/persist preserve the
+    # physical partitioning, and hashpartitioning(src) satisfies
+    # every downstream ClusteredDistribution whose keys INCLUDE src
+    # (the subset rule) — so LP vote rounds (groupBy(src, lab) +
+    # argmax window on src), the degree aggregate, and the
+    # assortativity joins all run with ZERO further exchanges per
+    # pass. Width is scale-adaptive from the free footer row count
+    # (the r13 gated-operator rule: checkpointed frames carry no
+    # stats, so AQE can never right-size them) — one build-time
+    # exchange buys exchange-free iteration for all nine consumers.
+    # Width: volume-adaptive (≈500k edge rows per partition, the
+    # pagerank loop's measured grain), floor 8 — the A/B optimum
+    # at sf0.1: 4 parts starve the assortativity/modularity joins
+    # (0.8 → 2.0 s), 32 parts drown the LP loop's many small
+    # per-round actions in task scheduling (5.9 → 9.2 s), 8 wins
+    # both (family sum 27.3 → 17.2 s) — capped at the session's
+    # parallelism.
+    n_li = _lineitem_num_rows(sf_dir)
+    parallelism = spark.sparkContext.defaultParallelism
+    parts = (
+        min(parallelism, max(8, (2 * n_li) // 500_000 + 1))
+        if n_li
+        else parallelism
+    )
+    sym = sym.repartition(parts, "src")
+    # eager=False: plan-only callers (CLI --explain) shouldn't pay
+    # the edge derivation; the first action materializes it once.
+    # Storage by volume (same rule as _copart_edges, r14): big
+    # symmetric edge lists cache as compressed columnar batches
+    # instead of checkpoint row blocks — string-keyed src/dst rows
+    # are ~3x wider than the co-part longs, so the heap math that
+    # OOM'd the sf3 triangle bites here even sooner.
+    if n_li > 1_500_000:
+        return sym.persist()
+    return sym.localCheckpoint(eager=False)
 
 
 @query(
@@ -967,45 +951,32 @@ def _triangle_top20(spark: SparkSession, sf_dir: str, **regime) -> DataFrame:
     )
 
 
-_COPART_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-appcache.register_evictor(
-    lambda qid: qid
-    in ("graph_triangle_count", "graph_triangle_count_shuffle"),
-    appcache.dict_cache_evictor(_COPART_EDGE_CACHE),
-)
-
-
+@appcache.amortized({"graph_triangle_count", "graph_triangle_count_shuffle"})
 def _copart_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) part co-order edge list, materialized once per
     (session, sf) — the same amortized derive-once contract as
     _coorder_edges: one orderkey-keyed self-join whose per-order fanout
     is C(lines_per_order, 2) ≤ 21, then a distinct."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_COPART_EDGE_CACHE, spark)
-    if key not in _COPART_EDGE_CACHE:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        b = li.select(
-            F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2")
-        )
-        edges = (
-            li.join(b, li["l_orderkey"] == b["k"])
-            .where(F.col("l_partkey") < F.col("p2"))
-            .select(F.col("l_partkey").alias("u"), F.col("p2").alias("v"))
-            .distinct()
-        )
-        # Storage by volume (free footer count, r13 neighbor-jaccard
-        # idiom): big edge lists cache as compressed columnar batches
-        # (persist) instead of checkpoint row blocks — the r14 sf3
-        # audit OOM'd an 8 GB heap pinning a 36M-edge localCheckpoint
-        # (~80 B/row deserialized vs ~16 B/row columnar).
-        if _lineitem_num_rows(sf_dir) > 1_500_000:
-            _COPART_EDGE_CACHE[key] = edges.persist()
-        else:
-            _COPART_EDGE_CACHE[key] = edges.localCheckpoint(eager=False)
-    return _COPART_EDGE_CACHE[key]
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    b = li.select(
+        F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2")
+    )
+    edges = (
+        li.join(b, li["l_orderkey"] == b["k"])
+        .where(F.col("l_partkey") < F.col("p2"))
+        .select(F.col("l_partkey").alias("u"), F.col("p2").alias("v"))
+        .distinct()
+    )
+    # Storage by volume (free footer count, r13 neighbor-jaccard
+    # idiom): big edge lists cache as compressed columnar batches
+    # (persist) instead of checkpoint row blocks — the r14 sf3
+    # audit OOM'd an 8 GB heap pinning a 36M-edge localCheckpoint
+    # (~80 B/row deserialized vs ~16 B/row columnar).
+    if _lineitem_num_rows(sf_dir) > 1_500_000:
+        return edges.persist()
+    return edges.localCheckpoint(eager=False)
 
 
 # ---------------------------------------------------------------------------

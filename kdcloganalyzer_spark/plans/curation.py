@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.operators.dedup import spread
 from kdcloganalyzer_spark.plans.registry import query
 from kdcloganalyzer_spark.sources.tables import load_table
@@ -1510,38 +1511,29 @@ def registry_query(qid: str):
 # ---------------------------------------------------------------------------
 # N-gram novelty (dataset-order memorization/novelty signal)
 # ---------------------------------------------------------------------------
-# Distinct (doc_id, 3-gram) table shared by the novelty family — the same
-# per-(session, sf) amortized-index contract as the MinHash signature and
-# edge caches: both the global and the incremental form read it, so the
-# corpus is exploded once per session.
-_NOVELTY_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Distinct (doc_id, 3-gram) table shared by the novelty family: both the
+# global and the incremental form read it, so the corpus is exploded once
+# per session.
+@appcache.amortized({"text_ngram_novelty", "text_ngram_novelty_incremental"})
 def _novelty_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kdcloganalyzer_spark import appcache
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_NOVELTY_GRAM_CACHE, spark)
-    if key not in _NOVELTY_GRAM_CACHE:
-        docs = spread(load_table(spark, sf_dir, "documents"))
-        ws = F.split(F.lower(F.col("text")), " ")
-        grams = (
-            docs.where(F.size(ws) >= 3)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(split(lower(text),"
-                        " ' ')) - 2),"
-                        " i -> concat_ws(' ',"
-                        "  slice(split(lower(text), ' '), i, 3)))"
-                    )
-                ).alias("gram"),
-            )
-            .dropDuplicates(["doc_id", "gram"])
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    ws = F.split(F.lower(F.col("text")), " ")
+    grams = (
+        docs.where(F.size(ws) >= 3)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(split(lower(text),"
+                    " ' ')) - 2),"
+                    " i -> concat_ws(' ',"
+                    "  slice(split(lower(text), ' '), i, 3)))"
+                )
+            ).alias("gram"),
         )
-        _NOVELTY_GRAM_CACHE[key] = grams.localCheckpoint(eager=False)
-    return _NOVELTY_GRAM_CACHE[key]
+        .dropDuplicates(["doc_id", "gram"])
+    )
+    return grams.localCheckpoint(eager=False)
 
 
 @query(
@@ -2145,9 +2137,7 @@ def _interleave_sources(spark: SparkSession, sf_dir: str, ranged: bool) -> DataF
     )
     if not ranged:
         return epoch
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="interleave_shards_")
+    out = appcache.tempdir(prefix="interleave_shards_")
     (
         epoch.repartitionByRange(8, "mix_pos")
         .sortWithinPartitions("mix_pos")

@@ -114,46 +114,40 @@ def dedup_ngram_jaccard_dford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WORDSET_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@appcache.amortized(
+    {
+        "dedup_clusters",
+        "dedup_containment",
+        "dedup_ngram_jaccard",
+        "dedup_ngram_jaccard_dford",
+        "pipeline_dedup_report",
+    }
+)
 def _wordsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(session, sf) tokenized word-set table (doc_id, lang, source,
     words, nw) shared by the whole prefix-join dedup family — tokenize
     ONCE per corpus snapshot, exactly what a 100 TB deployment persists
     next to the raw text. eager=False: plan-only callers don't pay it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_WORDSET_CACHE, spark)
-    if key not in _WORDSET_CACHE:
-        _WORDSET_CACHE[key] = dedup._prep_word_sets(
-            load_table(spark, sf_dir, "documents")
-        )
-    return _WORDSET_CACHE[key]
+    return dedup._prep_word_sets(load_table(spark, sf_dir, "documents"))
 
 
-_DFREQ_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@appcache.amortized({"dedup_ngram_jaccard_dford"})
 def _dfreq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(session, sf) vocabulary document-frequency table (tok, df)
     over the distinct word sets — the corpus statistic the df-ordered
     prefix index sorts by."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_DFREQ_CACHE, spark)
-    if key not in _DFREQ_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        d = (
-            dedup.spread(docs)
-            .select(dedup.word_set(F.col("text")).alias("words"))
-            .filter(F.size("words") > 0)
-        )
-        dfreq = (
-            d.select(F.explode("words").alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").alias("df"))
-        )
-        _DFREQ_CACHE[key] = dfreq.localCheckpoint(eager=False)
-    return _DFREQ_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    d = (
+        dedup.spread(docs)
+        .select(dedup.word_set(F.col("text")).alias("words"))
+        .filter(F.size("words") > 0)
+    )
+    dfreq = (
+        d.select(F.explode("words").alias("tok"))
+        .groupBy("tok")
+        .agg(F.count("*").alias("df"))
+    )
+    return dfreq.localCheckpoint(eager=False)
 
 
 @query(
@@ -223,56 +217,29 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.jaccard_join_delta_base(delta, base, 0.8)
 
 
-# MinHash signature table, materialized once per (session, sf, k) — the
-# "write the signature table before the join stage" design PLANS.md
-# finding 7 prescribes at real scale, shared by the representative-
-# assignment and pair-enumeration queries (a dedup deployment computes
-# signatures once per corpus snapshot and runs both decisions off them).
-_MINHASH_SIG_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
-def _minhash_sig(spark: SparkSession, sf_dir: str, k: int = 32) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    appcache.evict_stale(_MINHASH_SIG_CACHE, spark)
-    if key not in _MINHASH_SIG_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        d = (
-            dedup.spread(docs)
-            .select("doc_id", dedup.word_set(F.col("text")).alias("words"))
-            .filter(F.size("words") > 0)
-        )
-        # eager=False: constructing the query (e.g. CLI --explain) must
-        # not execute the signature scan; the first ACTION materializes
-        # it and every later query reuses the same checkpointed frame.
-        _MINHASH_SIG_CACHE[key] = dedup._minhash_signature(
-            d, k
-        ).localCheckpoint(eager=False)
-    return _MINHASH_SIG_CACHE[key]
-
-
-# md5-signature cache for the VERIFICATION twins (dedup_minhash_pairs_md5
-# + dedup_minhash_incremental_md5 share the same %3-slice k=16 signature
-# table — one scan serves both, same amortized-index contract as
-# _MINHASH_SIG_CACHE).
-_MINHASH_MD5_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# The %3-slice k=16 md5 MinHash signature table, computed once per
+# (session, sf) and shared by the verification twins and the band-tuning
+# evaluation.
+@appcache.amortized(
+    {
+        "dedup_fuzzy_minhash",
+        "dedup_minhash_band_tuning",
+        "dedup_minhash_incremental_md5",
+        "dedup_minhash_pairs_md5",
+    }
+)
 def _minhash_md5_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_MINHASH_MD5_SIG_CACHE, spark)
-    if key not in _MINHASH_MD5_SIG_CACHE:
-        docs = load_table(spark, sf_dir, "documents").where(
-            F.col("doc_id") % 3 == 0
-        )
-        d = (
-            dedup.spread(docs)
-            .select("doc_id", dedup.word_set(F.col("text")).alias("words"))
-            .filter(F.size("words") > 0)
-        )
-        _MINHASH_MD5_SIG_CACHE[key] = dedup._minhash_signature(
-            d, 16, dedup._md5_word_hash
-        ).localCheckpoint(eager=False)
-    return _MINHASH_MD5_SIG_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") % 3 == 0
+    )
+    d = (
+        dedup.spread(docs)
+        .select("doc_id", dedup.word_set(F.col("text")).alias("words"))
+        .filter(F.size("words") > 0)
+    )
+    return dedup._minhash_signature(
+        d, 16, dedup._md5_word_hash
+    ).localCheckpoint(eager=False)
 
 
 @query(
@@ -716,80 +683,43 @@ def sim_search_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CACHE: dict = {}
-_PQ_CACHE: dict = {}
-_IVFPQ_CACHE: dict = {}
-_PIVOT_CACHE: dict = {}
-
-# Min-of-N COLD protocol hooks (VERDICT r13 item 2): each index cache is
-# evictable by the qids that read through it, so a bench re-sample
-# re-pays the genuine index build.
-appcache.register_evictor(
-    lambda qid: qid
-    in (
-        "sim_search_ivf",
-        "sim_search_ivfpq",
-        # reads the same quantizer (round11_ops docstring): its BENCH
-        # cold signature was single-sample until this hook (r14 run 4)
-        "embed_cluster_kmeans_int",
-    ),
-    appcache.dict_cache_evictor(_IVF_CACHE),
-)
-appcache.register_evictor(
-    lambda qid: qid in ("sim_search_pq", "sim_search_ivfpq"),
-    appcache.dict_cache_evictor(_PQ_CACHE),
-)
-appcache.register_evictor(
-    lambda qid: qid == "sim_search_ivfpq",
-    appcache.dict_cache_evictor(_IVFPQ_CACHE),
-)
-appcache.register_evictor(
-    lambda qid: qid == "dedup_embedding_cosine",
-    appcache.dict_cache_evictor(_PIVOT_CACHE),
-)
-
-
+@appcache.amortized({"dedup_embedding_cosine"})
 def _pivot_index(spark: SparkSession, sf_dir: str):
     """Cached (per session+sf) pivot index for the pruned cosine join —
     the threshold-independent KMeans assignment + radii
     (operators/dedup.py:build_pivot_index), amortized like the
     IVF/PQ quantizers. (The radii collect makes the build eager by
     nature; it runs on first use, not at registration.)"""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_PIVOT_CACHE, spark)
-    if key not in _PIVOT_CACHE:
-        _PIVOT_CACHE[key] = dedup.build_pivot_index(
-            load_table(spark, sf_dir, "embeddings")
-        )
-    return _PIVOT_CACHE[key]
+    return dedup.build_pivot_index(load_table(spark, sf_dir, "embeddings"))
 
 
+@appcache.amortized(
+    {
+        "dedup_semantic",
+        "embed_cluster_kmeans_int",
+        "sim_search_ivf",
+        "sim_search_ivfpq",
+    }
+)
 def _ivf_index(spark: SparkSession, sf_dir: str):
     """Cached (per session+sf) IVF build: (persisted assignment, centers).
     Shared by sim_search_ivf AND sim_search_ivfpq — the composed index
     reuses the coarse quantizer instead of re-running the deterministic
     farthest-point + integer-Lloyd build (similarity.build_ivf_index)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_IVF_CACHE, spark)
-    if key not in _IVF_CACHE:
-        assigned, centers = similarity.build_ivf_index(
-            load_table(spark, sf_dir, "embeddings")
-        )
-        _IVF_CACHE[key] = (assigned.persist(), centers)
-    return _IVF_CACHE[key]
+    assigned, centers = similarity.build_ivf_index(
+        load_table(spark, sf_dir, "embeddings")
+    )
+    return assigned.persist(), centers
 
 
+@appcache.amortized({"sim_search_pq", "sim_search_ivfpq"})
 def _pq_index(spark: SparkSession, sf_dir: str):
     """Cached (per session+sf) PQ build: (persisted codes, codebook).
     Shared by sim_search_pq AND sim_search_ivfpq."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_PQ_CACHE, spark)
-    if key not in _PQ_CACHE:
-        encoded, codebook = similarity.build_pq_index(
-            load_table(spark, sf_dir, "embeddings")
-        )
-        _PQ_CACHE[key] = (encoded.persist(), codebook)
-    return _PQ_CACHE[key]
+    encoded, codebook = similarity.build_pq_index(
+        load_table(spark, sf_dir, "embeddings")
+    )
+    return encoded.persist(), codebook
 
 
 @query("sim_search_ivf", oracle=similarity.ivf_oracle_sql())
@@ -808,6 +738,18 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.topk_cosine_ivf(assigned, centers, n_queries=5, k=10)
 
 
+@appcache.amortized({"sim_search_ivfpq"})
+def _ivfpq_corpus(spark: SparkSession, sf_dir: str):
+    """(persisted IVF+PQ corpus table, centers, codebook), composed from
+    the two cached single-index builds."""
+    assigned, centers = _ivf_index(spark, sf_dir)
+    encoded, codebook = _pq_index(spark, sf_dir)
+    corpus = assigned.select("vec_id", "cell", "unit").join(
+        encoded.select("vec_id", "codes"), "vec_id"
+    )
+    return corpus.persist(), centers, codebook
+
+
 @query("sim_search_ivfpq")
 def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed IVF+PQ ANN (the FAISS-style production layout): coarse
@@ -821,16 +763,7 @@ def sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADC shortlist depends on that trained codebook; recall floor
     >= 0.7 @10 pinned by pytest — see SURVEY §2 for why PQ itself
     can't be made oracle-checkable)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_IVFPQ_CACHE, spark)
-    if key not in _IVFPQ_CACHE:
-        assigned, centers = _ivf_index(spark, sf_dir)
-        encoded, codebook = _pq_index(spark, sf_dir)
-        corpus = assigned.select("vec_id", "cell", "unit").join(
-            encoded.select("vec_id", "codes"), "vec_id"
-        )
-        _IVFPQ_CACHE[key] = (corpus.persist(), centers, codebook)
-    corpus, centers, codebook = _IVFPQ_CACHE[key]
+    corpus, centers, codebook = _ivfpq_corpus(spark, sf_dir)
     return similarity.topk_cosine_ivfpq(
         corpus,
         centers,
@@ -1641,9 +1574,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EXACT_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@appcache.amortized({"dedup_minhash_band_tuning", "dedup_minhash_eval"})
 def exact_pairs_md5_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact unblocked word-set Jaccard >= 0.9 pairs on the %3 corpus
     slice — the ground truth both index evaluations
@@ -1651,21 +1582,17 @@ def exact_pairs_md5_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cached per (session, sf) behind a lazy localCheckpoint: the
     quadratic-ish reference computation runs once per corpus snapshot,
     the amortized-index contract applied to the EVALUATION side."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_EXACT_PAIRS_CACHE, spark)
-    if key not in _EXACT_PAIRS_CACHE:
-        docs = load_table(spark, sf_dir, "documents").where(
-            F.col("doc_id") % 3 == 0
-        )
-        unblocked = docs.withColumn("lang", F.lit("_")).withColumn(
-            "source", F.lit("_")
-        )
-        _EXACT_PAIRS_CACHE[key] = (
-            dedup.ngram_jaccard_pairs_prefix(unblocked, 0.9)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=False)
-        )
-    return _EXACT_PAIRS_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") % 3 == 0
+    )
+    unblocked = docs.withColumn("lang", F.lit("_")).withColumn(
+        "source", F.lit("_")
+    )
+    return (
+        dedup.ngram_jaccard_pairs_prefix(unblocked, 0.9)
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=False)
+    )
 
 
 @query(

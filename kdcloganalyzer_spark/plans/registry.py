@@ -25,6 +25,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
+#: The sf the driver's correctness gate runs at. Oracle SQL that reads a
+#: staged input embeds that input's path at this sf as a static string.
+DRIVER_SF = "/root/testdata/sf0.01"
+
+#: (path at DRIVER_SF, path function) for every staged input an oracle
+#: embeds; ``oracle.oracle_sql_for`` rewrites each to the asked sf.
+DRIVER_PATHS: list[tuple[str, Callable[[str], str]]] = []
+
 
 def query(qid: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query callable under ``qid``, optionally with oracle SQL."""
@@ -38,6 +46,14 @@ def query(qid: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+def driver_path(local: Callable[[str], str]) -> str:
+    """Register a staged-input path function; returns its path at the
+    driver's sf, for embedding in oracle SQL."""
+    path = local(DRIVER_SF)
+    DRIVER_PATHS.append((path, local))
+    return path
 
 
 def load_all() -> None:

@@ -20,7 +20,7 @@ from kdcloganalyzer_spark import appcache
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.plans.registry import driver_path, query
 from kdcloganalyzer_spark.sources.tables import load_table
 
 
@@ -477,9 +477,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout that makes 100 TB scans cheap when queries carry partition
     predicates. Oracle computes the same aggregate from the unpartitioned
     table."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_part_")
+    out = appcache.tempdir(prefix="orders_part_")
     orders = load_table(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
@@ -491,7 +489,19 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_CACHE: dict = {}
+@appcache.amortized({"join_dynamic_partition_pruning"})
+def _day_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
+    """The events table as day-partitioned parquet, one file per day."""
+    out = appcache.tempdir(prefix="events_daypart_")
+    ev = load_table(spark, sf_dir, "events")
+    (
+        ev.withColumn("day", F.to_date("ts"))
+        .repartition("day")
+        .write.mode("overwrite")
+        .partitionBy("day")
+        .parquet(out)
+    )
+    return out
 
 
 @query(
@@ -520,22 +530,7 @@ def join_dynamic_partition_pruning(
     day directories are read — the star-schema scan-avoidance that at
     100 TB is the difference between reading a month and reading a
     weekend (plan shape pinned in tests/test_plans.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    appcache.evict_stale(_DPP_CACHE, spark)
-    if key not in _DPP_CACHE:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="events_daypart_")
-        ev = load_table(spark, sf_dir, "events")
-        (
-            ev.withColumn("day", F.to_date("ts"))
-            .repartition("day")
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(out)
-        )
-        _DPP_CACHE[key] = out
-    fact = spark.read.parquet(_DPP_CACHE[key])
+    fact = spark.read.parquet(_day_partitioned_events(spark, sf_dir))
     dim = spark.createDataFrame(
         [(f"2024-01-{d:02d}", "keep" if d >= 28 else "drop") for d in
          range(26, 31)],
@@ -842,9 +837,7 @@ def rollup_time_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     queried range. The oracle computes the daily answer directly from
     raw events, proving rollup-then-reaggregate is lossless for
     decomposable aggregates."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="events_rollup_")
+    out = appcache.tempdir(prefix="events_rollup_")
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -1086,9 +1079,7 @@ def sink_partition_overwrite_upsert(
     rewrites ONLY that partition in place; static overwrite mode would
     have wiped every other partition. The read-back aggregate proves the
     untouched partitions survived and the touched one was replaced."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="events_upsert_")
+    out = appcache.tempdir(prefix="events_upsert_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value", "event_type"
     )
@@ -1136,9 +1127,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt column, which forces every schema column through the parser;
     the eager localCheckpoint then lets us unpersist before returning."""
     import os
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_csv_")
+    out = appcache.tempdir(prefix="orders_csv_")
     orders = load_table(spark, sf_dir, "orders")
     orders.select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
@@ -1180,9 +1169,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     estates actually hold): documents written as ORC, re-read, and
     re-aggregated to the numbers the oracle computes from parquet —
     pushdown/pruning applies to ORC scans the same as parquet."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="docs_orc_")
+    out = appcache.tempdir(prefix="docs_orc_")
     docs = load_table(spark, sf_dir, "documents")
     docs.select("doc_id", "lang", "source", "n_chars").write.mode(
         "overwrite"
@@ -1207,9 +1194,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as JSONL, re-read with an EXPLICIT schema (never inferred —
     inference is a second full scan and types drift), re-aggregated to
     the same numbers the oracle computes from parquet."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_jsonl_")
+    out = appcache.tempdir(prefix="orders_jsonl_")
     orders = load_table(spark, sf_dir, "orders")
     orders.select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
@@ -1325,9 +1310,7 @@ def scan_custom_delimiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference (CustomFileInputFormat.java:19-32) applies identically:
     Spark plans splits per file and the lineSep reader handles
     delimiter-straddling records per split."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="custom_delim_")
+    out = appcache.tempdir(prefix="custom_delim_")
     docs = load_table(spark, sf_dir, "documents")
     docs.select("text").write.mode("overwrite").option("lineSep", "\x1e").text(out)
     back = spark.read.option("lineSep", "\x1e").text(out)
@@ -1388,9 +1371,7 @@ def sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange format log estates still receive from appliances; the
     scan parallelizes per file like any text source, and explicit
     schemas avoid the inference pass."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="orders_xml_")
+    out = appcache.tempdir(prefix="orders_xml_")
     orders = load_table(spark, sf_dir, "orders")
     orders.filter(F.col("o_orderkey") % 10 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1552,7 +1533,9 @@ def evolution_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/schema_evo_v1_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_EVO_GLOB = evolution_path_for_sf("/root/testdata/sf0.01") + "/*/*.parquet"
+DRIVER_EVO_GLOB = driver_path(
+    lambda sf: evolution_path_for_sf(sf) + "/*/*.parquet"
+)
 
 
 @query(
@@ -1631,7 +1614,25 @@ def _zkey_sql(x: str, y: str) -> str:
     )
 
 
-_ZORDER_CACHE: dict = {}
+@appcache.amortized({"sink_zorder_layout"})
+def _zorder_docs(spark: SparkSession, sf_dir: str) -> str:
+    """The documents table as parquet sorted by z-key."""
+    out = appcache.tempdir(prefix="docs_zorder_")
+    docs = load_table(spark, sf_dir, "documents")
+    bucket = (F.col("doc_id") % 1024).cast("long")
+    zk = _zkey_spark(F.col("n_chars"), bucket)
+    (
+        docs.select(
+            "doc_id", "n_chars", bucket.alias("bucket"), zk.alias("zkey")
+        )
+        # global sort -> range-partitioned files, each covering a
+        # tight z-interval (=> tight per-file min/max on BOTH dims)
+        .orderBy("zkey")
+        .write.mode("overwrite")
+        .option("parquet.block.size", 64 * 1024)
+        .parquet(out)
+    )
+    return out
 
 
 @query(
@@ -1671,27 +1672,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets the dim first. The write sorts by zkey ONCE per
     (session, sf) — at scale this is the periodic compaction job, not a
     per-query cost."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ZORDER_CACHE:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="docs_zorder_")
-        docs = load_table(spark, sf_dir, "documents")
-        bucket = (F.col("doc_id") % 1024).cast("long")
-        zk = _zkey_spark(F.col("n_chars"), bucket)
-        (
-            docs.select(
-                "doc_id", "n_chars", bucket.alias("bucket"), zk.alias("zkey")
-            )
-            # global sort -> range-partitioned files, each covering a
-            # tight z-interval (=> tight per-file min/max on BOTH dims)
-            .orderBy("zkey")
-            .write.mode("overwrite")
-            .option("parquet.block.size", 64 * 1024)
-            .parquet(out)
-        )
-        _ZORDER_CACHE[key] = out
-    back = spark.read.parquet(_ZORDER_CACHE[key])
+    back = spark.read.parquet(_zorder_docs(spark, sf_dir))
     return (
         back.filter(
             F.col("n_chars").between(200, 400)
@@ -2334,7 +2315,7 @@ def multiline_json_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/json_multiline_v2_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_MLJSON = multiline_json_path_for_sf("/root/testdata/sf0.01")
+DRIVER_MLJSON = driver_path(multiline_json_path_for_sf)
 
 
 @query(
@@ -4347,7 +4328,7 @@ def commit_log_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/commit_log_v1_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_COMMITLOG = commit_log_path_for_sf("/root/testdata/sf0.01")
+DRIVER_COMMITLOG = driver_path(commit_log_path_for_sf)
 
 
 @query(
@@ -5110,7 +5091,7 @@ def binfiles_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/binfiles_v1_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_BINFILES = binfiles_path_for_sf("/root/testdata/sf0.01")
+DRIVER_BINFILES = driver_path(binfiles_path_for_sf)
 
 
 @query(
@@ -5469,7 +5450,7 @@ def nested_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/nested_events_v1_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_NESTED = nested_path_for_sf("/root/testdata/sf0.01")
+DRIVER_NESTED = driver_path(nested_path_for_sf)
 
 
 @query(
@@ -5574,9 +5555,7 @@ def sink_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan_text_splittable's multi-line records); production keeps
     quoted-newline CSV in many small files or re-encodes to parquet at
     the edge, both noted here because this query is the proof of WHY."""
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="csv_quoted_")
+    out = appcache.tempdir(prefix="csv_quoted_")
     part = load_table(spark, sf_dir, "part")
     tricky = F.concat(
         F.col("p_name"), F.lit(',"'), F.lit("\n"), F.lit('x""y,')

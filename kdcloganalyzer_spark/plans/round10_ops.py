@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kdcloganalyzer_spark import appcache
 from kdcloganalyzer_spark.plans.registry import query
 
 # ---------------------------------------------------------------------------
@@ -643,8 +644,6 @@ def pipeline_shard_manifest_checksums(
     uniform). At 100 TB this IS the release-validation job: producer
     and consumer each compute the manifest and diff — kilobytes of
     state certifying terabytes of shards."""
-    import tempfile
-
     from kdcloganalyzer_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -658,7 +657,7 @@ def pipeline_shard_manifest_checksums(
         h60.alias("h60"),
         (h60 % _N_SHARDS).cast("int").alias("shard"),
     )
-    out = tempfile.mkdtemp(prefix="corpus_shards_")
+    out = appcache.tempdir(prefix="corpus_shards_")
     sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("shard").agg(

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kdcloganalyzer_spark.plans.registry import query
+from kdcloganalyzer_spark.plans.registry import driver_path, query
 
 # ---------------------------------------------------------------------------
 # Text analysis: co-occurrence lift and within-doc repetition
@@ -442,7 +442,7 @@ def hive_part_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/hive_part_orders_v1_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_HIVEPART = hive_part_path_for_sf("/root/testdata/sf0.01")
+DRIVER_HIVEPART = driver_path(hive_part_path_for_sf)
 
 
 @query(
@@ -662,7 +662,7 @@ def corrupt_scan_path_for_sf(sf_dir: str) -> str:
     return f"/tmp/corrupt_scan_v1_{(m.group(1) if m else '0.001')}"
 
 
-DRIVER_CORRUPT = corrupt_scan_path_for_sf("/root/testdata/sf0.01")
+DRIVER_CORRUPT = driver_path(corrupt_scan_path_for_sf)
 
 
 @query(

@@ -38,14 +38,15 @@ from kdcloganalyzer_spark.schemas import DRIVER_TABLES
 #: inference a bare ``spark.read.parquet`` repeats on every call
 #: (measured 0.09 s → 0.018 s per load at sf0.1; queries load 2-7
 #: tables, so the saving is per-query-construction-sized, guide §1.2).
-#: App-scoped like every other cache here (evict_stale). Deliberately
-#: NOT in the eviction registry: the registry exists so the bench's
-#: min-of-N COLD protocol can re-pay amortized DATA/INDEX builds, and a
-#: registered evictor marks its consumer ids as amortized (min-of-3
-#: cold loop). Schema metadata is the same class as the
-#: _nano_ts_columns footer cache below (never registered): it exists on
-#: any warm cluster catalog, costs ~0.08 s to rebuild, and caching it
-#: changes no query's data path.
+#: App-scoped like the amortized builds (a stopped app's entries are
+#: dropped on lookup), but deliberately not an ``appcache.amortized``
+#: build: the eviction registry exists so the bench's min-of-N COLD
+#: protocol can re-pay amortized DATA/INDEX builds, and a registered
+#: evictor marks its consumer ids as amortized (min-of-3 cold loop).
+#: Schema metadata is the same class as the _nano_ts_columns footer
+#: cache below (never registered): it exists on any warm cluster
+#: catalog, costs ~0.08 s to rebuild, and caching it changes no query's
+#: data path.
 _SCHEMA_CACHE: dict = {}
 
 #: applicationIds whose session confs (UTC timezone / nanosAsLong) are
@@ -117,20 +118,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_utc_session(spark)
     path = f"{sf_dir}/{name}.parquet"
     nano_cols = _nano_ts_columns(path)
+    app = spark.sparkContext.applicationId
     if nano_cols:
         # Runtime-settable; applied here so the loader works under any
         # SparkSession (the driver builds its own). Pinned once per app
         # (the memo clears with the schema cache on cold eviction).
-        pinned = _CONF_PINNED.setdefault(
-            spark.sparkContext.applicationId, set()
-        )
+        pinned = _CONF_PINNED.setdefault(app, set())
         if "nanos" not in pinned:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             pinned.add("nanos")
-    from kdcloganalyzer_spark import appcache
-
-    appcache.evict_stale(_SCHEMA_CACHE, spark)
-    key = (spark.sparkContext.applicationId, path)
+    for k in [k for k in _SCHEMA_CACHE if k[0] != app]:
+        del _SCHEMA_CACHE[k]  # a stopped app's schemas
+    key = (app, path)
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:
         df = spark.read.parquet(path)
